@@ -121,10 +121,17 @@ object Bench {
     // them once, so they belong in setup, not in the per-query timing.
     // setup_sec records this pass's wall clock so the artifact states
     // the timed-vs-setup split explicitly.
+    // A query that throws is recorded as FAILED with its message and
+    // never timed again: its time-to-failure is not a cost, so it
+    // stays out of every median and the total.
+    val failures = scala.collection.mutable.LinkedHashMap[String, String]()
+    def fail(name: String, e: Throwable): Unit =
+      failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+        .linesIterator.nextOption().getOrElse("").take(300)
     val setupT0 = System.nanoTime()
     sentinelOnce()
-    benched.foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
+    benched.foreach { case (name, fn) =>
+      try fn(spark, warmDir).count() catch { case e: Throwable => fail(name, e) }
     }
     val setupSec = (System.nanoTime() - setupT0) / 1e9
     // Median of n timed passes per query: one contended pass (GC, a
@@ -138,11 +145,12 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val cheapReps =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS_CHEAP", "7").toInt.max(reps)
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Double = {
+    def timeOnce(name: String,
+                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+        : Option[Double] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
+      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => fail(name, e); None }
     }
     // True median: averages the two middle elements for even sample
     // counts (reachable via the reps env vars) instead of biasing high
@@ -164,19 +172,24 @@ object Bench {
     def measureOnce(
         name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
+      if (failures.contains(name)) return
       // Reset + GC BEFORE the timing window (their cost is untimed), so
       // each query is measured against the same near-empty heap an
       // isolated run would see — not whatever the previous 100 queries
       // left resident.
       resetState(); System.gc()
-      var times = (1 to reps).map(_ => timeOnce(fn))
+      // stops at the first failing sample
+      def take(n: Int): Seq[Double] =
+        Iterator.fill(n)(timeOnce(name, fn)).takeWhile(_.isDefined).flatten.toSeq
+      var times = take(reps)
       // Extra-reps trigger keys off the MINIMUM of the initial samples:
       // min is the contention-free floor. Keying off the median would
       // let 2-of-3 contended samples of a genuinely sub-second query
       // inflate the median past 1.0 and skip the extra reps — the exact
       // jitter scenario the extra reps exist to defend against.
-      if (times.min < 1.0 && cheapReps > reps)
-        times = times ++ (reps until cheapReps).map(_ => timeOnce(fn))
+      if (!failures.contains(name) && times.min < 1.0 && cheapReps > reps)
+        times = times ++ take(cheapReps - reps)
+      if (failures.contains(name)) { samples.remove(name); return }
       // On a band-triggered retake, fresh samples REPLACE the suspect
       // ones (median reflects the clean JVM) but the old minimum is
       // kept: every sample is an upper bound of true cost, so min only
@@ -304,6 +317,15 @@ object Bench {
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
       else s
     }
+    def jsonStr(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c    => c.toString
+    } + "\""
+    val failed = failures.toSeq.sortBy(_._1).map { case (n, msg) =>
+      s""""$n":{"status":"failed","message":${jsonStr(msg)}}"""
+    }
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val sfName = new java.io.File(sfDir).getName
     // The stdout line carries the COMPLETE per-query map (r18 harness
@@ -325,7 +347,8 @@ object Bench {
         s""""sentinel_ratio":${fmt3(sentinelRatio)},""" +
         s""""query_ratio":${fmt3(driftRatio)},"drift_basis":"$driftBasis",""" +
         s""""foreign_jvms":$foreignMax,"windows_redone":$windowsRedone,""" +
-        s""""remeasured":$remeasured"""
+        s""""remeasured":$remeasured,""" +
+        s""""failed":${failed.mkString("{", ",", "}")}"""
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs$guard,"sf":"$sfName"}"""
     }
     // Full artifact (per-query median+min+sample count, unbudgeted) on
@@ -335,10 +358,10 @@ object Bench {
     // "norm" = median divided by the drift ratio (query-median basis
     // when available) — the number comparable across sessions;
     // "median" stays the raw wall-clock truth of THIS session.
-    val full = measured.toSeq.sortBy(_._1).map { case (n, (med, min, k)) =>
+    val full = (measured.toSeq.sortBy(_._1).map { case (n, (med, min, k)) =>
       s""""$n":{"median":${fmt(med)},"min":${fmt(min)},"reps":$k""" +
         s""","norm":${fmt(med / driftRatio)}}"""
-    }.mkString("{", ",", "}")
+    } ++ failed).mkString("{", ",", "}")
     val fullLine =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$full,""" +
       s""""setup_sec":${fmt(setupSec)},""" +

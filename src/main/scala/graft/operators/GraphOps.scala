@@ -623,14 +623,13 @@ object GraphOps {
       .agg(count(lit(1)).cast("bigint").as("e_in"))
     val m = canon.agg(count(lit(1)).cast("decimal(20,0)").as("m"))
       .crossJoin(missing)
+    val refusal = raise_error(concat(lit("modularity: "),
+      col("__miss").cast("string"),
+      lit(" edge endpoints missing from the assignment — a silent " +
+        "drop would misstate the community degree mass")))
     def gate(c: Column, tpe: String): Column =
-      when(col("__miss") === 0, c)
-        .otherwise(raise_error(concat(lit("modularity: "),
-          col("__miss").cast("string"),
-          lit(" edge endpoints missing from the assignment — a silent " +
-            "drop would misstate the community degree mass")))
-          .cast(tpe))
-    dc.join(ec, Seq("community"), "left")
+      when(col("__miss") === 0, c).otherwise(refusal.cast(tpe))
+    refuseMissing(m, refusal, dc.join(ec, Seq("community"), "left")
       .crossJoin(broadcast(m))
       .select(col("community"),
         gate(col("n_nodes"), "bigint").as("n_nodes"),
@@ -640,8 +639,24 @@ object GraphOps {
         gate(round((col("m") * coalesce(col("e_in"), lit(0L)).cast("decimal(20,0)") * 4
           - col("d_c") * col("d_c")).cast("decimal(38,0)").cast("double") /
           (col("m") * col("m") * 4).cast("decimal(38,0)").cast("double"), 9),
-          "double").as("q_contrib"))
+          "double").as("q_contrib")))
   }
+
+  /** `rows` plus one branch over the one-row `scalar` (which carries
+    * `__miss`) that raises `refusal` by itself. The column gates need
+    * a row to ride on, so without it an empty assignment — or a
+    * consumer that reads no gated column (a community-only
+    * projection, a count) — would get a quiet frame. The branch is a
+    * FILTER, which no column pruning removes, and it yields no row
+    * when nothing is missing.
+    */
+  private def refuseMissing(scalar: DataFrame, refusal: Column,
+                            rows: DataFrame): DataFrame =
+    rows.unionByName(scalar
+      .filter(when(col("__miss") === 0, lit(false))
+        .otherwise(refusal.cast("boolean")))
+      .select(rows.schema.fields.toIndexedSeq
+        .map(f => lit(null).cast(f.dataType).as(f.name)): _*))
 
   /** CONDUCTANCE of each community in an assignment — the
     * cut-quality companion to [[modularity]] (Kannan–Vempala–Vetta
@@ -689,14 +704,13 @@ object GraphOps {
       .groupBy(col("community")).agg(count(lit(1)).cast("bigint").as("cut_edges"))
     val totalVol = canon.agg((count(lit(1)) * 2).cast("bigint").as("vol_all"))
       .crossJoin(missing)
+    val refusal = raise_error(concat(lit("conductance: "),
+      col("__miss").cast("string"),
+      lit(" edge endpoints missing from the assignment — a silent " +
+        "drop would misstate the community volume")))
     def gate(c: Column, tpe: String): Column =
-      when(col("__miss") === 0, c)
-        .otherwise(raise_error(concat(lit("conductance: "),
-          col("__miss").cast("string"),
-          lit(" edge endpoints missing from the assignment — a silent " +
-            "drop would misstate the community volume")))
-          .cast(tpe))
-    dc.join(cut, Seq("community"), "left")
+      when(col("__miss") === 0, c).otherwise(refusal.cast(tpe))
+    refuseMissing(totalVol, refusal, dc.join(cut, Seq("community"), "left")
       .crossJoin(broadcast(totalVol))
       .select(col("community"),
         gate(col("n_nodes"), "bigint").as("n_nodes"),
@@ -707,7 +721,7 @@ object GraphOps {
           round(coalesce(col("cut_edges"), lit(0L)).cast("double") /
             least(col("deg_sum"), col("vol_all") - col("deg_sum"))
               .cast("double"), 9))
-          .otherwise(lit(null).cast("double")), "double").as("conductance"))
+          .otherwise(lit(null).cast("double")), "double").as("conductance")))
   }
 
   /** LINK PREDICTION by common-neighbor counting — the classic

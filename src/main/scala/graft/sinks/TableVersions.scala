@@ -31,14 +31,19 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * consistent directory, after which the loser's commit fails with a
   * clear version-taken error.
   *
-  * Shared by [[Compaction.compactVersioned]] (lock-free swap) and
+  * Shared by [[Compaction.compactVersioned]] (lock-free swap),
+  * [[graft.streaming.VersionedFold]] (the streaming snapshot folds),
+  * [[graft.streaming.VersionedDeltaState]] (dedup delta segments) and
   * [[graft.streaming.BucketedCdcState]] (incremental bucketed state).
+  * The streaming three stamp each version with its producing batch id
+  * through [[writeBatchTag]] / [[readBatchTag]].
   */
 object TableVersions {
 
   private val HintFile = "VERSION"
   private val Marker = "_GRAFT_COMMITTED"
   private val WriterToken = "_GRAFT_WRITER"
+  private val BatchTag = "_GRAFT_BATCH"
   private val DirPattern = "^v(\\d+)$".r
   private val StagingPattern = "^\\.v(\\d+)-.+$".r
 
@@ -167,6 +172,19 @@ object TableVersions {
     val out = fs.create(p, true)
     try out.write(s.getBytes("UTF-8")) finally out.close()
   }
+
+  /** The batch id a version directory was tagged with; None when it
+    * is untagged (batch-mode writes) or the tag is unreadable.
+    */
+  def readBatchTag(fs: FileSystem, versionDir: Path): Option[Long] =
+    readSmall(fs, new Path(versionDir, BatchTag))
+      .flatMap(s => Try(s.toLong).toOption)
+
+  /** Tag a PENDING version directory with its producing batch id — the
+    * tag becomes visible atomically with the commit rename.
+    */
+  def writeBatchTag(fs: FileSystem, versionDir: Path, batchId: Long): Unit =
+    writeSmall(fs, new Path(versionDir, BatchTag), batchId.toString)
 
   /** Read the advisory hint (diagnostics / external tooling). Corrupt
     * or partial hints degrade to None — the hint is never

@@ -125,12 +125,6 @@ object BucketedCdcState {
 
   // ---------------- write path ----------------
 
-  private val TagFile = "_GRAFT_BATCH"
-
-  private def readTag(fs: FileSystem, versionDir: Path): Option[Long] =
-    TableVersions.readSmall(fs, new Path(versionDir, TagFile))
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-
   /** Newest committed version whose batch tag is strictly below
     * `beforeTag`. The replay anchor: a re-run of batch N must see the
     * state AS OF batch N-1, not the state its own first attempt
@@ -145,7 +139,8 @@ object BucketedCdcState {
   private def versionBefore(fs: FileSystem, rootPath: Path,
                             beforeTag: Long): Option[Long] = {
     val tagged = TableVersions.committedVersions(fs, rootPath)
-      .map(v => v -> readTag(fs, TableVersions.dataDir(rootPath, v)))
+      .map(v => v ->
+        TableVersions.readBatchTag(fs, TableVersions.dataDir(rootPath, v)))
     val untagged = tagged.collect { case (v, None) => v }
     require(untagged.isEmpty,
       s"BucketedCdcState: $rootPath holds committed versions without a " +
@@ -229,11 +224,7 @@ object BucketedCdcState {
         .parquet(new Path(pending.dir, "buckets").toString)
       writeBucketMap(fs, pending.dir,
         map ++ touched.map(_ -> pending.version))
-      tag.foreach { t =>
-        val out = fs.create(new Path(pending.dir, TagFile), true)
-        out.write(t.toString.getBytes("UTF-8"))
-        out.close()
-      }
+      tag.foreach(TableVersions.writeBatchTag(fs, pending.dir, _))
       TableVersions.commit(fs, rootPath, pending)
     } finally bucketed.unpersist()
   }
@@ -253,8 +244,8 @@ object BucketedCdcState {
     // are the replay anchors of statePartialBefore (a re-run of batch
     // N reads the newest version tagged < N, however many times N
     // itself has committed)
-    val tags = versions.map(v =>
-      v -> readTag(fs, TableVersions.dataDir(rootPath, v))).toMap
+    val tags = versions.map(v => v ->
+      TableVersions.readBatchTag(fs, TableVersions.dataDir(rootPath, v))).toMap
     val maxTag = tags.values.flatten.reduceOption(_ max _)
     val anchorKeep = maxTag match {
       case Some(m) => versions.filter(v => tags(v).exists(_ >= m - 1)).toSet

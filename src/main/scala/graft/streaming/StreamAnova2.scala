@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.GroupTests
-import graft.sinks.TableVersions
 
 /** STREAMING two-way ANOVA (r17) — the live twin of
   * [[GroupTests.anovaTwoWay]], on the [[StreamGroupTests]]
@@ -19,10 +17,8 @@ import graft.sinks.TableVersions
   * over everything streamed so far BY CONSTRUCTION (shared code, not
   * a twin implementation).
   *
-  * Counts are additive, not idempotent — the committed-batchId
-  * replay guard skips a replayed batch whole; state publishes
-  * through [[TableVersions]] (marker-authoritative visibility, the
-  * StreamGroupTests conventions verbatim).
+  * Counts are additive, not idempotent — the [[VersionedFold]]
+  * replay guard skips a replayed batch whole.
   */
 object StreamAnova2 {
 
@@ -40,48 +36,22 @@ object StreamAnova2 {
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, famCol: String, aCol: String,
                  bCol: String, valueCol: String, dir: String,
-                 batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = batch.select(col(famCol).as("g"), col(aCol).as("fa"),
-        col(bCol).as("fb"), col(valueCol).cast("long").as("v"))
-      .groupBy(col("g"), col("fa"), col("fb"), col("v"))
-      .agg(count(lit(1)).as("cnt"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "cells").toString)
-          .unionByName(delta)
+                 batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = batch.select(col(famCol).as("g"), col(aCol).as("fa"),
+          col(bCol).as("fb"), col(valueCol).cast("long").as("v"))
+        .groupBy(col("g"), col("fa"), col("fb"), col("v"))
+        .agg(count(lit(1)).as("cnt"))
+      VersionedFold.Staged("cells" -> prev.fold(delta)(p =>
+        p.table("cells").unionByName(delta)
           .groupBy(col("g"), col("fa"), col("fb"), col("v"))
-          .agg(sum(col("cnt")).as("cnt"))
-      case None => delta
+          .agg(sum(col("cnt")).as("cnt"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "cells").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** Current two-way ANOVA per family — == the batch
     * [[GroupTests.anovaTwoWay]] over everything streamed so far.
     */
   def anova2(spark: SparkSession, dir: String,
-             famCol: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamAnova2($dir): no committed state yet"))
-    GroupTests.anova2FromCells(
-      spark.read.parquet(
-        new Path(TableVersions.dataDir(root, v), "cells").toString),
-      famCol)
-  }
+             famCol: String): DataFrame =
+    GroupTests.anova2FromCells(VersionedFold.read(spark, dir, "cells"), famCol)
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.PrefixSum
-import graft.sinks.TableVersions
 
 /** STREAMING exact ROC AUC maintenance — the streaming twin of the
   * batch `q105_auc` (Mann-Whitney rank-sum): the model-quality gauge
@@ -22,8 +20,8 @@ import graft.sinks.TableVersions
   * distributed [[PrefixSum]], exactly the batch q105 algebra.
   *
   * Counts sum, so the merge is NOT replay-idempotent by algebra; the
-  * committed-batchId guard (the StreamOhlc convention) makes a
-  * redelivered microbatch a detected no-op.
+  * [[VersionedFold]] batchId guard makes a redelivered microbatch a
+  * detected no-op.
   */
 object StreamAuc {
 
@@ -54,44 +52,18 @@ object StreamAuc {
     * batchIds (at-least-once foreachBatch) are detected and skipped.
     */
   def applyBatch(batch: DataFrame, scoreCol: String, posCol: String,
-                 dir: String, batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    if (batchId.exists(id => lastBatchId(fs, root, cur).exists(id <= _))) return
-    val delta = partial(batch, scoreCol, posCol)
-    val merged = cur match {
-      case Some(v) => merge(
-        spark.read.parquet(
-          new Path(TableVersions.dataDir(root, v), "counts").toString),
-        delta)
-      case None => delta
+                 dir: String, batchId: Option[Long] = None): Unit =
+    VersionedFold(batch.sparkSession, dir, batchId) { prev =>
+      val delta = partial(batch, scoreCol, posCol)
+      VersionedFold.Staged(
+        "counts" -> prev.fold(delta)(p => merge(p.table("counts"), delta)))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "counts").toString)
-    batchId.foreach(id => TableVersions.writeSmall(
-      fs, new Path(pending.dir, "_batchid"), id.toString))
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
-
-  private def lastBatchId(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                          cur: Option[Long]): Option[Long] =
-    cur.flatMap(v => TableVersions.readSmall(
-        fs, new Path(TableVersions.dataDir(root, v), "_batchid")))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
 
   /** Exact (two_u, n_pos, n_neg, auc) over the committed state —
     * verbatim the batch q105 algebra.
     */
   def auc(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(s"StreamAuc($dir): no committed state yet"))
-    val perValue = spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "counts").toString)
+    val perValue = VersionedFold.read(spark, dir, "counts")
     val cum = PrefixSum.runningTotal(perValue, "score", "n_at", "n_cum")
       .withColumn("n_below", col("n_cum") - col("n_at"))
     cum.agg(

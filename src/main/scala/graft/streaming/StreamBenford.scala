@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Benford
-import graft.sinks.TableVersions
 
 /** STREAMING Benford first-digit screen — a live fraud/data-quality
   * readout over an append stream without re-scanning the corpus: the
@@ -16,11 +14,10 @@ import graft.sinks.TableVersions
   * nine-row merge.
   *
   * Counts are additive, not idempotent — the fold carries the
-  * committed-batchId replay guard (the [[StreamGroupTests]]
-  * convention): a batch at or below the committed id is skipped
-  * whole. State publishes through [[TableVersions]]; the readout
-  * selects the current version and runs the shared batch machinery,
-  * so stream == batch by construction.
+  * [[VersionedFold]] replay guard: a batch at or below the committed
+  * id is skipped whole. The readout selects the current snapshot and
+  * runs the shared batch machinery, so stream == batch by
+  * construction.
   */
 object StreamBenford {
 
@@ -36,45 +33,21 @@ object StreamBenford {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, valueCol: String, dir: String,
-                 batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = batch.select(col(valueCol).cast("long").as("v"))
-      .filter(col("v") > 0)
-      .select(substring(col("v").cast("string"), 1, 1)
-        .cast("int").as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("o"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "digits").toString)
-          .unionByName(delta)
-          .groupBy(col("digit")).agg(sum(col("o")).as("o"))
-      case None => delta
+                 batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = batch.select(col(valueCol).cast("long").as("v"))
+        .filter(col("v") > 0)
+        .select(substring(col("v").cast("string"), 1, 1)
+          .cast("int").as("digit"))
+        .groupBy(col("digit")).agg(count(lit(1)).as("o"))
+      VersionedFold.Staged("digits" -> prev.fold(delta)(p =>
+        p.table("digits").unionByName(delta)
+          .groupBy(col("digit")).agg(sum(col("o")).as("o"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "digits").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** Current Benford screen — == the batch [[Benford.test]] over
     * everything streamed so far.
     */
-  def current(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamBenford($dir): no committed state yet"))
-    Benford.testFromCounts(spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "digits").toString))
-  }
+  def current(spark: SparkSession, dir: String): DataFrame =
+    Benford.testFromCounts(VersionedFold.read(spark, dir, "digits"))
 }

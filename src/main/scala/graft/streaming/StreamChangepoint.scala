@@ -1,11 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-
-import graft.sinks.TableVersions
 
 /** STREAMING change-point monitoring — the continuously-updated CUSUM
   * of the batch `q89_changepoint`: as events stream in, "where did
@@ -13,16 +10,14 @@ import graft.sinks.TableVersions
   * retaining events.
   *
   * Per-day counts are a MERGEABLE aggregate (sums), so state is the
-  * days×1 count table in [[TableVersions]]; each microbatch merges
+  * days×1 count table in a [[VersionedFold]]; each microbatch merges
   * its per-day partial counts in, then the CUSUM statistic
   * `D_k = K·S_k − k·S_K` (all exact integers — the q89 algebra) is
   * recomputed over the DAYS-SIZED state, not the stream. Counts SUM,
-  * so the merge is not replay-idempotent by algebra: each committed
-  * version records its producing batchId and a redelivered microbatch
-  * (foreachBatch is at-least-once across a crash between our commit
-  * and the engine's commit-log write) is detected and skipped — with
-  * that guard the detected day always equals the batch query over
-  * everything seen, pinned by the spec.
+  * so the merge is not replay-idempotent by algebra: the
+  * [[VersionedFold]] batchId guard skips a redelivered microbatch —
+  * with that guard the detected day always equals the batch query
+  * over everything seen, pinned by the spec.
   */
 object StreamChangepoint {
 
@@ -41,46 +36,21 @@ object StreamChangepoint {
     * recorded in the current committed version is a replay → no-op.
     */
   def applyBatch(batch: DataFrame, dir: String,
-                 batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val last = cur.flatMap(v => TableVersions.readSmall(
-        fs, new Path(TableVersions.dataDir(root, v), "_batchid")))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    if (batchId.exists(id => last.exists(id <= _))) return
-    val delta = batch.groupBy(to_date(col("ts")).as("day"))
-      .agg(count(lit(1)).cast("long").as("c"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-          new Path(TableVersions.dataDir(root, v), "daily").toString)
-          .unionByName(delta)
-          .groupBy(col("day")).agg(sum(col("c")).cast("long").as("c"))
-      case None => delta
+                 batchId: Option[Long] = None): Unit =
+    VersionedFold(batch.sparkSession, dir, batchId) { prev =>
+      val delta = batch.groupBy(to_date(col("ts")).as("day"))
+        .agg(count(lit(1)).cast("long").as("c"))
+      VersionedFold.Staged("daily" -> prev.fold(delta)(p =>
+        p.table("daily").unionByName(delta)
+          .groupBy(col("day")).agg(sum(col("c")).cast("long").as("c"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "daily").toString)
-    batchId.foreach(id => TableVersions.writeSmall(
-      fs, new Path(pending.dir, "_batchid"), id.toString))
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** The current change-point over everything seen: (change_day, d_k,
     * n_days, total_events) — the q89 exact-integer CUSUM over the
     * days-sized state table.
     */
   def changepoint(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamChangepoint($dir): no committed state yet"))
-    val daily = spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "daily").toString)
-      .localCheckpoint(true)
+    val daily = VersionedFold.read(spark, dir, "daily").localCheckpoint(true)
     val tot = daily.agg(count(lit(1)).cast("long"), sum(col("c")).cast("long"))
       .collect()(0)
     val k = tot.getLong(0)

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.GroupTests
-import graft.sinks.TableVersions
 
 /** STREAMING Cochran–Mantel–Haenszel maintenance — a live stratified
   * exposure/outcome association over an append stream: the per-
@@ -14,8 +12,8 @@ import graft.sinks.TableVersions
   * statistic of the whole test, so a microbatch folds in as one
   * four-way conditional count + one stratum-cardinality merge.
   *
-  * Counts are additive, not idempotent — committed-batchId replay
-  * guard (the [[StreamRobustStats]] convention). The readout runs
+  * Counts are additive, not idempotent — the [[VersionedFold]]
+  * replay guard skips a replayed batch. The readout runs
   * the shared [[GroupTests.cmhFromStrata]] batch machinery, so
   * stream == batch by construction.
   */
@@ -34,50 +32,26 @@ object StreamCmh {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, strataCol: String, exposureCol: String,
-                 outcomeCol: String, dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = batch.select(col(strataCol).as("g"),
-        col(exposureCol).cast("boolean").as("x"),
-        col(outcomeCol).cast("boolean").as("y"))
-      .groupBy(col("g"))
-      .agg(sum(when(col("x") && col("y"), 1L).otherwise(0L)).as("a"),
-        sum(when(col("x") && !col("y"), 1L).otherwise(0L)).as("b"),
-        sum(when(!col("x") && col("y"), 1L).otherwise(0L)).as("c"),
-        sum(when(!col("x") && !col("y"), 1L).otherwise(0L)).as("d"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "strata").toString)
-          .unionByName(delta)
+                 outcomeCol: String, dir: String, batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = batch.select(col(strataCol).as("g"),
+          col(exposureCol).cast("boolean").as("x"),
+          col(outcomeCol).cast("boolean").as("y"))
+        .groupBy(col("g"))
+        .agg(sum(when(col("x") && col("y"), 1L).otherwise(0L)).as("a"),
+          sum(when(col("x") && !col("y"), 1L).otherwise(0L)).as("b"),
+          sum(when(!col("x") && col("y"), 1L).otherwise(0L)).as("c"),
+          sum(when(!col("x") && !col("y"), 1L).otherwise(0L)).as("d"))
+      VersionedFold.Staged("strata" -> prev.fold(delta)(p =>
+        p.table("strata").unionByName(delta)
           .groupBy(col("g"))
           .agg(sum(col("a")).as("a"), sum(col("b")).as("b"),
-            sum(col("c")).as("c"), sum(col("d")).as("d"))
-      case None => delta
+            sum(col("c")).as("c"), sum(col("d")).as("d"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "strata").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** Current CMH test — == the batch [[GroupTests.cmh]] over
     * everything streamed so far.
     */
-  def cmh(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamCmh($dir): no committed state yet"))
-    GroupTests.cmhFromStrata(spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "strata").toString))
-  }
+  def cmh(spark: SparkSession, dir: String): DataFrame =
+    GroupTests.cmhFromStrata(VersionedFold.read(spark, dir, "strata"))
 }

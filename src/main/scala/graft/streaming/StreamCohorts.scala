@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Cohorts
-import graft.sinks.TableVersions
 
 /** STREAMING cohort-retention maintenance — the live form of q142:
   * state is the pair of sufficient-statistic tables the readout
@@ -16,11 +14,11 @@ import graft.sinks.TableVersions
   * earlier event correctly re-cohorts its user, which no
   * append-only design could — and the activity set merges by
   * distinct-union. Merges are idempotent on CONTENT but the fold is
-  * guarded by the committed-batchId convention anyway (one guard
-  * convention across every additive stream in this library beats
-  * per-operator reasoning about which merges happen to be
-  * idempotent). Readout calls the SAME [[Cohorts.retention]] the
-  * batch query uses — stream == batch by construction and by spec.
+  * guarded by the [[VersionedFold]] batchId check anyway (one guard
+  * across every additive stream in this library beats per-operator
+  * reasoning about which merges happen to be idempotent). Readout
+  * calls the SAME [[Cohorts.retention]] the batch query uses —
+  * stream == batch by construction and by spec.
   */
 object StreamCohorts {
 
@@ -36,51 +34,28 @@ object StreamCohorts {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, userCol: String, tsCol: String,
-                 dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val weeks = batch.select(col(userCol).as("user_id"),
-      to_date(date_trunc("week", col(tsCol))).as("am"))
-    val dFirst = weeks.groupBy(col("user_id")).agg(min(col("am")).as("cohort"))
-    val dActive = weeks.distinct()
-    val (first, active) = cur match {
-      case Some(v) =>
-        val vdir = TableVersions.dataDir(root, v)
-        (spark.read.parquet(new Path(vdir, "first").toString)
-           .unionByName(dFirst)
-           .groupBy(col("user_id")).agg(min(col("cohort")).as("cohort")),
-         spark.read.parquet(new Path(vdir, "active").toString)
-           .unionByName(dActive).distinct())
-      case None => (dFirst, dActive)
+                 dir: String, batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val weeks = batch.select(col(userCol).as("user_id"),
+        to_date(date_trunc("week", col(tsCol))).as("am"))
+      val dFirst = weeks.groupBy(col("user_id")).agg(min(col("am")).as("cohort"))
+      val dActive = weeks.distinct()
+      val (first, active) = prev match {
+        case Some(p) =>
+          (p.table("first").unionByName(dFirst)
+             .groupBy(col("user_id")).agg(min(col("cohort")).as("cohort")),
+           p.table("active").unionByName(dActive).distinct())
+        case None => (dFirst, dActive)
+      }
+      VersionedFold.Staged("first" -> first, "active" -> active)
     }
-    val pending = TableVersions.begin(fs, root)
-    first.write.parquet(new Path(pending.dir, "first").toString)
-    active.write.parquet(new Path(pending.dir, "active").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** Current retention matrix — == the batch [[Cohorts.retention]]
     * over everything streamed so far.
     */
   def retention(spark: SparkSession, dir: String,
                 maxOffset: Int = 12): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamCohorts($dir): no committed state yet"))
-    val vdir = TableVersions.dataDir(root, v)
-    Cohorts.retention(
-      spark.read.parquet(new Path(vdir, "first").toString),
-      spark.read.parquet(new Path(vdir, "active").toString),
-      maxOffset)
+    val s = VersionedFold.snapshot(spark, dir)
+    Cohorts.retention(s.table("first"), s.table("active"), maxOffset)
   }
 }

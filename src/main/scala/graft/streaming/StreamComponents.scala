@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Components
-import graft.sinks.TableVersions
 
 /** STREAMING connected-components maintenance — the incremental form
   * of [[Components.connectedComponents]] under an edge-insert stream
@@ -23,7 +21,7 @@ import graft.sinks.TableVersions
   * side converging in O(1) hops because every state component is
   * depth-1 by construction.
   *
-  * Replay-idempotent BY ALGEBRA (no batchId bookkeeping): a
+  * Replay-idempotent BY ALGEBRA (no [[VersionedFold]] batchId): a
   * redelivered batch contributes edges whose endpoints already share
   * a component — min-label propagation is idempotent over them, and
   * the unchanged fixpoint commits byte-identically.
@@ -42,34 +40,18 @@ object StreamComponents {
 
   /** One microbatch of undirected edges; factored out for direct use. */
   def applyBatch(batch: DataFrame, aCol: String, bCol: String,
-                 dir: String): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val edges = batch.select(col(aCol).cast("long").as("src"),
-      col(bCol).cast("long").as("dst"))
-    val all = TableVersions.current(fs, root) match {
-      case Some(v) =>
-        val stars = spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "labels").toString)
-          .select(col("id").as("src"), col("component").as("dst"))
-        stars.unionByName(edges)
-      case None => edges
+                 dir: String): Unit =
+    VersionedFold(batch.sparkSession, dir, None) { prev =>
+      val edges = batch.select(col(aCol).cast("long").as("src"),
+        col(bCol).cast("long").as("dst"))
+      val all = prev.fold(edges)(_.table("labels")
+        .select(col("id").as("src"), col("component").as("dst"))
+        .unionByName(edges))
+      VersionedFold.Staged(
+        "labels" -> Components.connectedComponents(all, "src", "dst"))
     }
-    val labels = Components.connectedComponents(all, "src", "dst")
-    val pending = TableVersions.begin(fs, root)
-    labels.write.parquet(new Path(pending.dir, "labels").toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** The current committed (id, component) labelling. */
-  def labels(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamComponents($dir): no committed labelling yet"))
-    spark.read.parquet(new Path(TableVersions.dataDir(root, v), "labels").toString)
-  }
+  def labels(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "labels")
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.GroupTests
-import graft.sinks.TableVersions
 
 /** STREAMING Cramér's V — a live categorical-association readout
   * over an append stream: the per-(family, row, column) contingency
@@ -17,10 +15,9 @@ import graft.sinks.TableVersions
   * cell-cardinality.
   *
   * Counts are additive, not idempotent — the fold carries the
-  * committed-batchId replay guard (the [[StreamGroupTests]]
-  * convention). State publishes through [[TableVersions]]; the
-  * readout selects the current version and runs the shared batch
-  * machinery, so stream == batch by construction.
+  * [[VersionedFold]] replay guard. The readout selects the current
+  * snapshot and runs the shared batch machinery, so stream == batch
+  * by construction.
   */
 object StreamCramersV {
 
@@ -37,46 +34,23 @@ object StreamCramersV {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, famCol: String, rowCol: String,
-                 colCol: String, dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = batch.select(col(famCol).as("g"), col(rowCol).as("r"),
-        col(colCol).as("c"))
-      .groupBy(col("g"), col("r"), col("c"))
-      .agg(count(lit(1)).cast("bigint").as("o"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "cells").toString)
-          .unionByName(delta)
+                 colCol: String, dir: String, batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = batch.select(col(famCol).as("g"), col(rowCol).as("r"),
+          col(colCol).as("c"))
+        .groupBy(col("g"), col("r"), col("c"))
+        .agg(count(lit(1)).cast("bigint").as("o"))
+      VersionedFold.Staged("cells" -> prev.fold(delta)(p =>
+        p.table("cells").unionByName(delta)
           .groupBy(col("g"), col("r"), col("c"))
-          .agg(sum(col("o")).cast("bigint").as("o"))
-      case None => delta
+          .agg(sum(col("o")).cast("bigint").as("o"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "cells").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** Current chi-square + Cramér's V per family — == the batch
     * [[GroupTests.cramersV]] over everything streamed so far.
     */
   def current(spark: SparkSession, dir: String,
-              famCol: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamCramersV($dir): no committed state yet"))
-    GroupTests.cramersVFromCells(spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "cells").toString), famCol)
-  }
+              famCol: String): DataFrame =
+    GroupTests.cramersVFromCells(VersionedFold.read(spark, dir, "cells"),
+      famCol)
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.DailySeries
-import graft.sinks.TableVersions
 
 /** STREAMING daily-series maintenance — live autocorrelation and
   * rolling-median readouts over an append stream of timestamped
@@ -16,7 +14,7 @@ import graft.sinks.TableVersions
   * O(|batch|) per fold, readouts at date-cardinality.
   *
   * Sums are additive, not idempotent — the fold carries the
-  * committed-batchId replay guard (the StreamRobustStats convention).
+  * [[VersionedFold]] replay guard.
   * Readouts call the SAME [[DailySeries]] operators the batch
   * q139/q140 contract queries use, so stream == batch by
   * construction (and by spec).
@@ -37,41 +35,18 @@ object StreamDailySeries {
     * `amountCol` integral (the cents convention).
     */
   def applyBatch(batch: DataFrame, tsCol: String, amountCol: String,
-                 dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = batch.select(to_date(col(tsCol)).as("day"),
-        col(amountCol).cast("long").as("rev"))
-      .groupBy(col("day")).agg(sum(col("rev")).as("rev"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "daily").toString)
-          .unionByName(delta)
-          .groupBy(col("day")).agg(sum(col("rev")).as("rev"))
-      case None => delta
+                 dir: String, batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = batch.select(to_date(col(tsCol)).as("day"),
+          col(amountCol).cast("long").as("rev"))
+        .groupBy(col("day")).agg(sum(col("rev")).as("rev"))
+      VersionedFold.Staged("daily" -> prev.fold(delta)(p =>
+        p.table("daily").unionByName(delta)
+          .groupBy(col("day")).agg(sum(col("rev")).as("rev"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "daily").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
-  private def daily(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamDailySeries($dir): no committed state yet"))
-    spark.read.parquet(new Path(TableVersions.dataDir(root, v), "daily").toString)
-  }
+  private def daily(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "daily")
 
   /** Live ACF — == the batch [[DailySeries.acf]] over everything
     * streamed so far.

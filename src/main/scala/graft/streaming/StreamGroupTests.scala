@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{GroupTests, RankCorr}
-import graft.sinks.TableVersions
 
 /** STREAMING K-sample test battery — live Kruskal–Wallis / one-way
   * ANOVA / Mood's-median readouts over an append stream, without ever
@@ -19,11 +17,10 @@ import graft.sinks.TableVersions
   * count aggregate + one merge at cell-cardinality.
   *
   * Counts are additive, not idempotent — a replayed batch would
-  * double-count — so the fold carries the committed-batchId replay
-  * guard (the [[StreamRobustStats]] convention): a batch at or below
-  * the committed id is skipped whole. State publishes through
-  * [[TableVersions]]; readouts select the current version and run the
-  * shared batch machinery, so stream == batch by construction.
+  * double-count — so the fold carries the [[VersionedFold]] replay
+  * guard: a batch at or below the committed id is skipped whole.
+  * Readouts select the current snapshot and run the shared batch
+  * machinery, so stream == batch by construction.
   */
 object StreamGroupTests {
 
@@ -40,43 +37,19 @@ object StreamGroupTests {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, famCol: String, sampleCol: String,
-                 valueCol: String, dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = batch.select(col(famCol).as("g"),
-        col(sampleCol).as("smp"), col(valueCol).cast("long").as("v"))
-      .groupBy(col("g"), col("smp"), col("v")).agg(count(lit(1)).as("cnt"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "cells").toString)
-          .unionByName(delta)
+                 valueCol: String, dir: String, batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = batch.select(col(famCol).as("g"),
+          col(sampleCol).as("smp"), col(valueCol).cast("long").as("v"))
+        .groupBy(col("g"), col("smp"), col("v")).agg(count(lit(1)).as("cnt"))
+      VersionedFold.Staged("cells" -> prev.fold(delta)(p =>
+        p.table("cells").unionByName(delta)
           .groupBy(col("g"), col("smp"), col("v"))
-          .agg(sum(col("cnt")).as("cnt"))
-      case None => delta
+          .agg(sum(col("cnt")).as("cnt"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "cells").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
-  private def cells(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamGroupTests($dir): no committed state yet"))
-    spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "cells").toString)
-  }
+  private def cells(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "cells")
 
   /** Current Kruskal–Wallis H per family — == the batch
     * [[RankCorr.kruskalWallis]] over everything streamed so far.

@@ -1,20 +1,17 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.SpatialJoin
-import graft.sinks.TableVersions
 
 /** STREAMING grid-hotspot maintenance — the streaming twin of the
   * q132 density scan: per-cell point counts are a SUMMABLE monoid, so
   * state is one row per occupied cell (cell cardinality, never
   * points), folded per microbatch; the 3×3-neighborhood report runs
   * on demand over state only. Counts sum ⇒ redelivered batchIds are
-  * skipped via the committed `_batchid` marker (the StreamOhlc
-  * guard). Publication via [[TableVersions]].
+  * skipped by the [[VersionedFold]] guard.
   */
 object StreamHotspots {
 
@@ -30,42 +27,17 @@ object StreamHotspots {
 
   def applyBatch(batch: DataFrame, xCol: String, yCol: String,
                  cellSize: Long, dir: String,
-                 batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val lastApplied = cur.flatMap(v => TableVersions.readSmall(
-        fs, new Path(TableVersions.dataDir(root, v), "_batchid")))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    if (batchId.exists(id => lastApplied.exists(id <= _))) return
-    val delta = SpatialJoin.cellCounts(batch, xCol, yCol, cellSize)
-    val input = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "cells").toString)
-          .unionByName(delta)
-      case None => delta
+                 batchId: Option[Long] = None): Unit =
+    VersionedFold(batch.sparkSession, dir, batchId) { prev =>
+      val delta = SpatialJoin.cellCounts(batch, xCol, yCol, cellSize)
+      val input = prev.fold(delta)(_.table("cells").unionByName(delta))
+      VersionedFold.Staged("cells" -> input.groupBy(col("cx"), col("cy"))
+        .agg(sum(col("n")).cast("bigint").as("n")))
     }
-    val merged = input.groupBy(col("cx"), col("cy"))
-      .agg(sum(col("n")).cast("bigint").as("n"))
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "cells").toString)
-    batchId.foreach(id => TableVersions.writeSmall(
-      fs, new Path(pending.dir, "_batchid"), id.toString))
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** The maintained per-cell count state. */
-  def state(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamHotspots($dir): no committed state yet"))
-    spark.read.parquet(new Path(TableVersions.dataDir(root, v), "cells").toString)
-  }
+  def state(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "cells")
 
   /** The batch-identical hotspot report over everything streamed:
     * == `SpatialJoin.gridHotspots` over all points so far.

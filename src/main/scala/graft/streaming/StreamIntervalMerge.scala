@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.IntervalMerge
-import graft.sinks.TableVersions
 
 /** STREAMING islands-and-gaps maintenance — a continuously-updated
   * coalesced-interval view (per key: maximal busy spans with member
@@ -23,11 +21,8 @@ import graft.sinks.TableVersions
   * Weights break replay idempotence (a re-delivered interval re-adds
   * its member count even though the span geometry is unchanged), so
   * streamed batches carry their foreachBatch batchId and a
-  * redelivered microbatch is detected and skipped — the StreamOhlc
-  * guard. State publishes through [[TableVersions]]: staging dir +
-  * atomic commit marker, so readers always see one complete
-  * committed span table and a crashed writer leaves only staging
-  * garbage for the next `begin` to sweep.
+  * redelivered microbatch is skipped by the [[VersionedFold]] guard;
+  * readers always see one complete committed span table.
   */
 object StreamIntervalMerge {
 
@@ -47,43 +42,18 @@ object StreamIntervalMerge {
     */
   def applyBatch(batch: DataFrame, keyCol: String, startCol: String,
                  endCol: String, dir: String,
-                 batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val lastApplied = cur.flatMap(v => TableVersions.readSmall(
-        fs, new Path(TableVersions.dataDir(root, v), "_batchid")))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    if (batchId.exists(id => lastApplied.exists(id <= _))) return
-    val delta = batch.select(col(keyCol), col(startCol).as("span_start"),
-      col(endCol).as("span_end"), lit(1L).as("weight"))
-    val input = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-          new Path(TableVersions.dataDir(root, v), "spans").toString)
-          .unionByName(delta)
-      case None => delta
+                 batchId: Option[Long] = None): Unit =
+    VersionedFold(batch.sparkSession, dir, batchId) { prev =>
+      val delta = batch.select(col(keyCol), col(startCol).as("span_start"),
+        col(endCol).as("span_end"), lit(1L).as("weight"))
+      val input = prev.fold(delta)(_.table("spans").unionByName(delta))
+      VersionedFold.Staged("spans" -> IntervalMerge.coalesce(input, keyCol,
+        "span_start", "span_end", "weight"))
     }
-    val merged = IntervalMerge.coalesce(input, keyCol,
-      "span_start", "span_end", "weight")
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "spans").toString)
-    batchId.foreach(id => TableVersions.writeSmall(
-      fs, new Path(pending.dir, "_batchid"), id.toString))
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** The current committed span view (call only after a first
     * committed batch).
     */
-  def spans(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamIntervalMerge($dir): no committed spans yet"))
-    spark.read.parquet(new Path(TableVersions.dataDir(root, v), "spans").toString)
-  }
+  def spans(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "spans")
 }

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-
-import graft.sinks.TableVersions
 
 /** STREAMING OHLC maintenance — per-day open/high/low/close bars kept
   * continuously current, the streaming twin of the batch `q87_ohlc`.
@@ -17,11 +14,9 @@ import graft.sinks.TableVersions
   * events: each microbatch aggregates to per-day partial bars (with
   * the exact event-time keys the batch query uses), merges with the
   * state table by the same rule, and publishes through
-  * [[TableVersions]]. State is days×1 rows. NOT replay-idempotent by
-  * algebra (counts sum) — so each committed version records its
-  * producing batchId, and a redelivered microbatch (foreachBatch is
-  * at-least-once across a crash between our commit and the engine's
-  * commit-log write) is detected and skipped.
+  * [[VersionedFold]]. State is days×1 rows. NOT replay-idempotent by
+  * algebra (counts sum) — so a redelivered microbatch is skipped by
+  * the [[VersionedFold]] batchId guard.
   *
   * Scale shape: per batch one hash aggregation of the batch + a
   * days-sized merge; no event-level state anywhere.
@@ -76,49 +71,18 @@ object StreamOhlc {
   /** One microbatch; factored out for direct use.
     *
     * Counts SUM, so the merge is NOT replay-idempotent by algebra —
-    * and foreachBatch is at-least-once: a crash between our
-    * TableVersions commit and the streaming engine's own commit-log
-    * write redelivers the microbatch. The guard: each committed
-    * version records the batchId that produced it (`_batchid`, staged
-    * inside the version dir so it appears atomically with the commit),
-    * and a redelivered batchId ≤ the recorded one is a no-op.
-    * Batch-mode callers (no batchId) always apply.
+    * the [[VersionedFold]] batchId guard skips a redelivered
+    * microbatch. Batch-mode callers (no batchId) always apply.
     */
   def applyBatch(batch: DataFrame, dir: String,
-                 batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    if (batchId.exists(id => lastBatchId(fs, root, cur).exists(id <= _))) return
-    val delta = partial(batch)
-    val merged = cur match {
-      case Some(v) => merge(
-        spark.read.parquet(new Path(TableVersions.dataDir(root, v), "bars").toString),
-        delta)
-      case None => delta
+                 batchId: Option[Long] = None): Unit =
+    VersionedFold(batch.sparkSession, dir, batchId) { prev =>
+      val delta = partial(batch)
+      VersionedFold.Staged(
+        "bars" -> prev.fold(delta)(p => merge(p.table("bars"), delta)))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "bars").toString)
-    batchId.foreach(id => TableVersions.writeSmall(
-      fs, new Path(pending.dir, "_batchid"), id.toString))
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
-
-  private def lastBatchId(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-                          cur: Option[Long]): Option[Long] =
-    cur.flatMap(v => TableVersions.readSmall(
-        fs, new Path(TableVersions.dataDir(root, v), "_batchid")))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
 
   /** The current committed bars (internal merge keys dropped). */
-  def bars(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(s"StreamOhlc($dir): no committed bars yet"))
-    spark.read.parquet(new Path(TableVersions.dataDir(root, v), "bars").toString)
-      .drop("__k_open", "__k_close")
-  }
+  def bars(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "bars").drop("__k_open", "__k_close")
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Ols
-import graft.sinks.TableVersions
 
 /** STREAMING grouped two-covariate OLS — a live regression readout
   * over an append stream: the exact integer moment table
@@ -18,8 +16,7 @@ import graft.sinks.TableVersions
   * state is integers, not floats: no ulp drift across fold orders).
   *
   * Moments are additive, not idempotent — the fold carries the
-  * committed-batchId replay guard (the [[StreamGroupTests]]
-  * convention). State publishes through [[TableVersions]].
+  * [[VersionedFold]] replay guard.
   */
 object StreamOls {
 
@@ -41,50 +38,25 @@ object StreamOls {
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, groupCol: String, x1Col: String,
                  x2Col: String, yCol: String, dir: String,
-                 batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = Ols.moments2(batch.select(col(groupCol).as("g"),
-      col(x1Col).cast("long").as("x1"), col(x2Col).cast("long").as("x2"),
-      col(yCol).cast("long").as("y")))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "moments").toString)
-          .unionByName(delta)
+                 batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = Ols.moments2(batch.select(col(groupCol).as("g"),
+        col(x1Col).cast("long").as("x1"), col(x2Col).cast("long").as("x2"),
+        col(yCol).cast("long").as("y")))
+      VersionedFold.Staged("moments" -> prev.fold(delta)(p =>
+        p.table("moments").unionByName(delta)
           .groupBy(col("g"))
           .agg(sum(col(momentCols.head)).cast("decimal(38,0)")
               .as(momentCols.head),
             momentCols.tail.map(c =>
-              sum(col(c)).cast("decimal(38,0)").as(c)): _*)
-      case None => delta
+              sum(col(c)).cast("decimal(38,0)").as(c)): _*)))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "moments").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** Current per-group fit — == the batch [[Ols.fitGrouped2]] over
     * everything streamed so far (exact: integer state, shared
     * Cramer algebra, incl. its magnitude refusal).
     */
   def current(spark: SparkSession, dir: String,
-              groupCol: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamOls($dir): no committed state yet"))
-    Ols.fitFromMoments2(spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "moments").toString),
-      groupCol)
-  }
+              groupCol: String): DataFrame =
+    Ols.fitFromMoments2(VersionedFold.read(spark, dir, "moments"), groupCol)
 }

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-
-import graft.sinks.TableVersions
 
 /** STREAMING weighted reservoir sampling — a k-row sample, selection
   * probability ∝ weight, maintained continuously over an insert
@@ -18,8 +15,9 @@ import graft.sinks.TableVersions
   * a pure function of the data seen. Streaming maintenance is then
   * the same fold as the skyline's: keep the k smallest keys of
   * (current reservoir ∪ batch) — and replays are no-ops by algebra
-  * (re-offering a row cannot change the k smallest). State is the
-  * k-row reservoir itself, published through [[TableVersions]].
+  * (re-offering a row cannot change the k smallest), so the fold
+  * passes no [[VersionedFold]] batchId. State is the k-row reservoir
+  * itself.
   *
   * Scale shape: per batch one TakeOrdered over (reservoir + batch)
   * with bounded per-partition heaps — never a sort of history; state
@@ -40,36 +38,17 @@ object StreamReservoir {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, idCol: String, weightCol: String,
-                 k: Int, dir: String, salt: String = "wsample"): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val input = TableVersions.current(fs, root) match {
-      case Some(v) =>
-        spark.read.parquet(
-          new Path(TableVersions.dataDir(root, v), "sample").toString)
-          .unionByName(batch)
-        // a re-delivered row appears twice in the union: its A-ES key
-        // is identical both times, and the id tie-break collapses the
-        // pair, so the k smallest are unchanged — replay-safe
-      case None => batch
+                 k: Int, dir: String, salt: String = "wsample"): Unit =
+    VersionedFold(batch.sparkSession, dir, None) { prev =>
+      // a re-delivered row appears twice in the union: its A-ES key is
+      // identical both times, and the id tie-break collapses the pair,
+      // so the k smallest are unchanged — replay-safe
+      val input = prev.fold(batch)(_.table("sample").unionByName(batch))
+      VersionedFold.Staged("sample" -> graft.operators.Sampling
+        .weightedSample(input.dropDuplicates(idCol), idCol, weightCol, k, salt))
     }
-    val sample = graft.operators.Sampling
-      .weightedSample(input.dropDuplicates(idCol), idCol, weightCol, k, salt)
-    val pending = TableVersions.begin(fs, root)
-    sample.write.parquet(new Path(pending.dir, "sample").toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** The current committed reservoir. */
-  def reservoir(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamReservoir($dir): no committed reservoir yet"))
-    spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "sample").toString)
-  }
+  def reservoir(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "sample")
 }

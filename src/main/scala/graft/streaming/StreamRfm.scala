@@ -1,11 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-
-import graft.sinks.TableVersions
 
 /** STREAMING RFM maintenance — a continuously-updated customer
   * recency/frequency/monetary table, the streaming twin of the batch
@@ -21,9 +18,8 @@ import graft.sinks.TableVersions
   * stream.
   *
   * Counts and sums are NOT replay-idempotent, so streamed batches
-  * carry their foreachBatch batchId and redeliveries are skipped —
-  * the StreamOhlc guard. Publication via [[TableVersions]] (staging
-  * + atomic commit marker).
+  * carry their foreachBatch batchId and redeliveries are skipped by
+  * the [[VersionedFold]] guard.
   */
 object StreamRfm {
 
@@ -40,43 +36,19 @@ object StreamRfm {
     * o_totalprice); factored out for replay tests and batch callers.
     */
   def applyBatch(batch: DataFrame, dir: String,
-                 batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val lastApplied = cur.flatMap(v => TableVersions.readSmall(
-        fs, new Path(TableVersions.dataDir(root, v), "_batchid")))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    if (batchId.exists(id => lastApplied.exists(id <= _))) return
-    val delta = graft.queries.Advanced3.rfmBase(batch)
-    val input = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-          new Path(TableVersions.dataDir(root, v), "rfm").toString)
-          .unionByName(delta)
-      case None => delta
+                 batchId: Option[Long] = None): Unit =
+    VersionedFold(batch.sparkSession, dir, batchId) { prev =>
+      val delta = graft.queries.Advanced3.rfmBase(batch)
+      val input = prev.fold(delta)(_.table("rfm").unionByName(delta))
+      VersionedFold.Staged("rfm" -> input.groupBy(col("cust"))
+        .agg(max(col("rec")).as("rec"),
+          sum(col("freq")).cast("bigint").as("freq"),
+          sum(col("mon")).cast("bigint").as("mon")))
     }
-    val merged = input.groupBy(col("cust"))
-      .agg(max(col("rec")).as("rec"),
-        sum(col("freq")).cast("bigint").as("freq"),
-        sum(col("mon")).cast("bigint").as("mon"))
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "rfm").toString)
-    batchId.foreach(id => TableVersions.writeSmall(
-      fs, new Path(pending.dir, "_batchid"), id.toString))
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** The maintained per-customer metric state. */
-  def state(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(s"StreamRfm($dir): no committed state yet"))
-    spark.read.parquet(new Path(TableVersions.dataDir(root, v), "rfm").toString)
-  }
+  def state(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "rfm")
 
   /** Quintile scores over the maintained state — exactly the batch
     * q115 arithmetic, run at state (customers) cardinality.

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.RobustStats
-import graft.sinks.TableVersions
 
 /** STREAMING robust statistics — live per-group median/MAD/outlier
   * and quantile-band readouts over an append stream, without ever
@@ -16,11 +14,10 @@ import graft.sinks.TableVersions
   * folds in as one count aggregate + one merge at value-cardinality.
   *
   * Counts are additive, not idempotent — a replayed batch would
-  * double-count — so the fold carries the committed-batchId replay
-  * guard (the StreamRfm/StreamAuc convention): a batch at or below
-  * the committed id is skipped whole. State publishes through
-  * [[TableVersions]]; readouts select the current version and run
-  * the shared value-cardinality machinery.
+  * double-count — so the fold carries the [[VersionedFold]] replay
+  * guard: a batch at or below the committed id is skipped whole.
+  * Readouts select the current snapshot and run the shared
+  * value-cardinality machinery.
   */
 object StreamRobustStats {
 
@@ -36,41 +33,18 @@ object StreamRobustStats {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, groupCol: String, valueCol: String,
-                 dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = batch.select(col(groupCol).as("g"),
-        col(valueCol).cast("long").as("v"))
-      .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "counts").toString)
-          .unionByName(delta)
-          .groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt"))
-      case None => delta
+                 dir: String, batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = batch.select(col(groupCol).as("g"),
+          col(valueCol).cast("long").as("v"))
+        .groupBy(col("g"), col("v")).agg(count(lit(1)).as("cnt"))
+      VersionedFold.Staged("counts" -> prev.fold(delta)(p =>
+        p.table("counts").unionByName(delta)
+          .groupBy(col("g"), col("v")).agg(sum(col("cnt")).as("cnt"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "counts").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
-  private def counts(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamRobustStats($dir): no committed state yet"))
-    spark.read.parquet(new Path(TableVersions.dataDir(root, v), "counts").toString)
-  }
+  private def counts(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "counts")
 
   /** Current median/MAD/outlier summary — == the batch
     * [[RobustStats.madSummary]] over everything streamed so far.

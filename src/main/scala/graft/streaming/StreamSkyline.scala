@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Skyline
-import graft.sinks.TableVersions
 
 /** STREAMING skyline maintenance — the continuously-updated Pareto
   * frontier of an insert stream, through the batch identity
@@ -16,11 +14,9 @@ import graft.sinks.TableVersions
   * Replay safety comes from ALGEBRA, not bookkeeping: inserts are
   * idempotent for a skyline (re-adding points cannot change
   * dominance), so a replayed microbatch folds in again and produces
-  * the same frontier — no seen-set, no delta log. The frontier is
-  * published through [[TableVersions]] (staging + atomic rename +
-  * commit marker), so readers always see one complete committed
-  * frontier and a crashed writer leaves only invisible staging
-  * garbage that the next `begin` sweeps.
+  * the same frontier — no seen-set, no delta log, no
+  * [[VersionedFold]] batchId. Readers always see one complete
+  * committed frontier.
   *
   * Scale shape: per batch, cost = batch + current frontier through
   * the two-phase skyline (shard-local windows, range-partitioned
@@ -43,44 +39,24 @@ object StreamSkyline {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, minCol: String, maxCol: String,
-                 idCol: String, dir: String, shards: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val input = TableVersions.current(fs, root) match {
-      case Some(v) =>
-        spark.read.parquet(
-          new Path(TableVersions.dataDir(root, v), "frontier").toString)
-          .unionByName(batch)
-      case None => batch
+                 idCol: String, dir: String, shards: Int = 64): Unit =
+    VersionedFold(batch.sparkSession, dir, None) { prev =>
+      val input = prev.fold(batch)(_.table("frontier").unionByName(batch))
+      // pareto2d keeps coincident points (neither dominates the other),
+      // so a REPLAYED point that already sits in the committed frontier
+      // would survive twice and frontier rows would accumulate per
+      // replay — the id dedup (mirroring StreamReservoir) restores the
+      // fold's idempotence at the row-multiset level, not just the set
+      // level.
+      VersionedFold.Staged("frontier" -> Skyline.pareto2d(
+        input.dropDuplicates(idCol), minCol, maxCol, col(idCol), shards))
     }
-    // pareto2d keeps coincident points (neither dominates the other),
-    // so a REPLAYED point that already sits in the committed frontier
-    // would survive twice and frontier rows would accumulate per
-    // replay — the id dedup (mirroring StreamReservoir) restores the
-    // fold's idempotence at the row-multiset level, not just the set
-    // level.
-    val sky = Skyline.pareto2d(input.dropDuplicates(idCol),
-      minCol, maxCol, col(idCol), shards)
-    val pending = TableVersions.begin(fs, root)
-    // data under a SUBDIR of the staging dir: a parquet overwrite of
-    // the staging dir itself would wipe the writer token fence
-    sky.write.parquet(new Path(pending.dir, "frontier").toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** The current committed frontier (empty schema-less read refused —
     * call only after at least one batch committed).
     */
-  def frontier(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(s"StreamSkyline($dir): no committed frontier yet"))
-    spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "frontier").toString)
-  }
+  def frontier(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "frontier")
 
   // ------------------- CDC (delete-bearing) form -------------------
   //
@@ -123,70 +99,47 @@ object StreamSkyline {
     * Unlike the insert-only fold, this apply is NOT replay-idempotent
     * by algebra (a replayed upsert would re-remove the rows it just
     * inserted and consume budget spuriously), so streamed batches
-    * carry their batchId and a redelivery is detected and skipped —
-    * the StreamOhlc guard. Batch-mode callers (no batchId) always
+    * carry their batchId and a redelivery is skipped by the
+    * [[VersionedFold]] guard. Batch-mode callers (no batchId) always
     * apply.
     */
   def applyCdcBatch(batch: DataFrame, minCol: String, maxCol: String,
                     idCol: String, opCol: String, dir: String,
                     k: Int = 8, shards: Int = 64,
-                    batchId: Option[Long] = None): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val lastApplied = cur.flatMap(v => TableVersions.readSmall(
-        fs, new Path(TableVersions.dataDir(root, v), "_batchid")))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    if (batchId.exists(id => lastApplied.exists(id <= _))) return
-    val inserts = batch.filter(col(opCol) =!= 1)
-      .select(batch.columns.filterNot(_ == opCol).map(col): _*)
-    val touchedIds = batch.select(col(idCol)).distinct().localCheckpoint(true)
-    val (candidates, depthAfter) = cur match {
-      case Some(v) =>
-        val vdir = TableVersions.dataDir(root, v)
-        val state = spark.read.parquet(new Path(vdir, "layers").toString)
-          .drop("__layer")
-        val prevDepth = TableVersions.readSmall(fs, new Path(vdir, ExactDepthFile))
-          .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(k.toLong)
-        // budget consumption = state rows REMOVED (delete or replace);
-        // deletes of never-retained or never-seen ids are free
-        val removed = state.join(touchedIds, Seq(idCol), "left_semi").count()
-        val after = prevDepth - removed
-        if (after < 1)
-          throw new IllegalStateException(
-            s"StreamSkyline($dir): k-layer delete budget exhausted " +
-              s"($removed in-state removals against exactDepth=$prevDepth) — " +
-              "the frontier can no longer be proven exact. Rebuild the view " +
-              "from a full snapshot (or use a larger k).")
-        (state.join(touchedIds, Seq(idCol), "left_anti").unionByName(inserts),
-          after)
-      case None => (inserts, k.toLong)
+                    batchId: Option[Long] = None): Unit =
+    VersionedFold(batch.sparkSession, dir, batchId) { prev =>
+      val inserts = batch.filter(col(opCol) =!= 1)
+        .select(batch.columns.filterNot(_ == opCol).map(col): _*)
+      val touchedIds = batch.select(col(idCol)).distinct().localCheckpoint(true)
+      val (candidates, depthAfter) = prev match {
+        case Some(p) =>
+          val state = p.table("layers").drop("__layer")
+          val prevDepth = p.aside(ExactDepthFile)
+            .flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(k.toLong)
+          // budget consumption = state rows REMOVED (delete or replace);
+          // deletes of never-retained or never-seen ids are free
+          val removed = state.join(touchedIds, Seq(idCol), "left_semi").count()
+          val after = prevDepth - removed
+          if (after < 1)
+            throw new IllegalStateException(
+              s"StreamSkyline($dir): k-layer delete budget exhausted " +
+                s"($removed in-state removals against exactDepth=$prevDepth) — " +
+                "the frontier can no longer be proven exact. Rebuild the view " +
+                "from a full snapshot (or use a larger k).")
+          (state.join(touchedIds, Seq(idCol), "left_anti").unionByName(inserts),
+            after)
+        case None => (inserts, k.toLong)
+      }
+      VersionedFold.Staged("layers" -> Skyline.kLayers(
+          candidates.dropDuplicates(idCol), minCol, maxCol, idCol, k, shards))
+        .withAside(ExactDepthFile, depthAfter.toString)
     }
-    val layered = Skyline.kLayers(candidates.dropDuplicates(idCol),
-      minCol, maxCol, idCol, k, shards)
-    val pending = TableVersions.begin(fs, root)
-    layered.write.parquet(new Path(pending.dir, "layers").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, ExactDepthFile),
-      depthAfter.toString)
-    batchId.foreach(id => TableVersions.writeSmall(
-      fs, new Path(pending.dir, "_batchid"), id.toString))
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
   /** The current committed CDC frontier: layer 1 of the retained
     * k-layer state (exact while the delete budget holds — the apply
     * refuses past it, so a committed state is always exact).
     */
-  def frontierCdc(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamSkyline($dir): no committed layers yet"))
-    spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "layers").toString)
+  def frontierCdc(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "layers")
       .filter(col("__layer") === 1).drop("__layer")
-  }
 }

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Survival
-import graft.sinks.TableVersions
 
 /** STREAMING survival maintenance — live Kaplan–Meier curves and
   * log-rank tests over an observation stream, without ever
@@ -17,12 +15,10 @@ import graft.sinks.TableVersions
   * in as one count aggregate + one merge at group×time cardinality.
   *
   * Counts are additive, not idempotent — a replayed batch would
-  * double-count — so the fold carries the committed-batchId replay
-  * guard (the [[StreamRobustStats]] convention): a batch at or below
-  * the committed id is skipped whole. State publishes through
-  * [[TableVersions]]; readouts select the current version and run
-  * the shared batch machinery, so stream == batch by construction
-  * AND by spec.
+  * double-count — so the fold carries the [[VersionedFold]] replay
+  * guard: a batch at or below the committed id is skipped whole.
+  * Readouts select the current snapshot and run the shared batch
+  * machinery, so stream == batch by construction AND by spec.
   *
   * Observation rows: (group, time, event) with event 1 = occurred,
   * 0 = right-censored at time.
@@ -42,46 +38,22 @@ object StreamSurvival {
 
   /** One microbatch; factored out for replay and direct use. */
   def applyBatch(batch: DataFrame, groupCol: String, timeCol: String,
-                 eventCol: String, dir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val committed = cur.flatMap(v => TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(root, v), "batch"))).map(_.toLong)
-    if (committed.exists(batchId <= _)) return // replayed batch: no-op
-    val delta = batch.select(col(groupCol).cast("string").as("g"),
-        col(timeCol).cast("long").as("t"),
-        col(eventCol).cast("int").as("e"))
-      .groupBy(col("g"), col("t"))
-      .agg(sum(when(col("e") === 1, 1L).otherwise(0L)).as("d"),
-        count(lit(1)).as("cnt"))
-    val merged = cur match {
-      case Some(v) =>
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "counts").toString)
-          .unionByName(delta)
+                 eventCol: String, dir: String, batchId: Long): Unit =
+    VersionedFold(batch.sparkSession, dir, Some(batchId)) { prev =>
+      val delta = batch.select(col(groupCol).cast("string").as("g"),
+          col(timeCol).cast("long").as("t"),
+          col(eventCol).cast("int").as("e"))
+        .groupBy(col("g"), col("t"))
+        .agg(sum(when(col("e") === 1, 1L).otherwise(0L)).as("d"),
+          count(lit(1)).as("cnt"))
+      VersionedFold.Staged("counts" -> prev.fold(delta)(p =>
+        p.table("counts").unionByName(delta)
           .groupBy(col("g"), col("t"))
-          .agg(sum(col("d")).as("d"), sum(col("cnt")).as("cnt"))
-      case None => delta
+          .agg(sum(col("d")).as("d"), sum(col("cnt")).as("cnt"))))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "counts").toString)
-    TableVersions.writeSmall(fs, new Path(pending.dir, "batch"),
-      batchId.toString)
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
-  }
 
-  private def counts(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamSurvival($dir): no committed state yet"))
-    spark.read.parquet(
-      new Path(TableVersions.dataDir(root, v), "counts").toString)
-  }
+  private def counts(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "counts")
 
   /** Current Kaplan–Meier curve — == the batch
     * [[Survival.kaplanMeier]] over everything streamed so far.

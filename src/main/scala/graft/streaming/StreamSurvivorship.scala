@@ -1,11 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-
-import graft.sinks.TableVersions
 
 /** STREAMING golden-record maintenance — the streaming twin of
   * `cdc.Survivorship.goldenRecord` (q129): a continuously-merged
@@ -20,10 +17,8 @@ import graft.sinks.TableVersions
   * state. History is never re-read.
   *
   * `n_updates` is a SUM (not idempotent), so redelivered batchIds are
-  * skipped via the committed `_batchid` marker — the StreamOhlc
-  * guard. Publication via [[TableVersions]] (staging + atomic commit
-  * marker); [[golden]] projects the batch-identical surface from
-  * state on demand.
+  * skipped by the [[VersionedFold]] guard; [[golden]] projects the
+  * batch-identical surface from state on demand.
   */
 object StreamSurvivorship {
 
@@ -64,51 +59,26 @@ object StreamSurvivorship {
                  batchId: Option[Long] = None): Unit = {
     require(seqCols.nonEmpty && fields.nonEmpty,
       "StreamSurvivorship: need seq and field columns")
-    val spark = batch.sparkSession
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = TableVersions.current(fs, root)
-    val lastApplied = cur.flatMap(v => TableVersions.readSmall(
-        fs, new Path(TableVersions.dataDir(root, v), "_batchid")))
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    if (batchId.exists(id => lastApplied.exists(id <= _))) return
-    val delta = collapse(
-      batch.withColumn("__n", lit(1L))
-        .withColumn("__last", col(seqCols.head)),
-      keyCol, seqCols, fields)
-    val input = cur match {
-      case Some(v) =>
-        // state candidates re-enter as (seq…, value) structs: max over
-        // the union is exactly the arg-max over everything seen
-        spark.read.parquet(
-            new Path(TableVersions.dataDir(root, v), "golden").toString)
-          .unionByName(delta)
-      case None => delta
-    }
-    val merged = {
+    VersionedFold(batch.sparkSession, dir, batchId) { prev =>
+      val delta = collapse(
+        batch.withColumn("__n", lit(1L))
+          .withColumn("__last", col(seqCols.head)),
+        keyCol, seqCols, fields)
+      // state candidates re-enter as (seq…, value) structs: max over
+      // the union is exactly the arg-max over everything seen
+      val input = prev.fold(delta)(_.table("golden").unionByName(delta))
       val picks = fields.map(f => max(col(candName(f))).as(candName(f)))
       val aggs = picks ++ Seq(
         sum(col("__n")).cast("bigint").as("__n"),
         max(col("__last")).as("__last"))
-      input.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*)
+      VersionedFold.Staged(
+        "golden" -> input.groupBy(col(keyCol)).agg(aggs.head, aggs.tail: _*))
     }
-    val pending = TableVersions.begin(fs, root)
-    merged.write.parquet(new Path(pending.dir, "golden").toString)
-    batchId.foreach(id => TableVersions.writeSmall(
-      fs, new Path(pending.dir, "_batchid"), id.toString))
-    TableVersions.commit(fs, root, pending)
-    TableVersions.prune(fs, root, keep = 4)
   }
 
   /** The maintained per-key candidate state (struct form). */
-  def state(spark: SparkSession, dir: String): DataFrame = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = TableVersions.current(fs, root).getOrElse(
-      throw new IllegalStateException(
-        s"StreamSurvivorship($dir): no committed state yet"))
-    spark.read.parquet(new Path(TableVersions.dataDir(root, v), "golden").toString)
-  }
+  def state(spark: SparkSession, dir: String): DataFrame =
+    VersionedFold.read(spark, dir, "golden")
 
   /** The batch-identical golden-record surface: per key, each field's
     * surviving value + n_updates + last_seen (== `Survivorship

@@ -19,8 +19,8 @@ import graft.sinks.TableVersions
   *     readers can partition-prune),
   *   - `_SEGMENTS` — one version number per line: the versions whose
   *     `seg/` directories together form the state AS OF this commit,
-  *   - `_GRAFT_BATCH` — the committing batch id (the replay anchor
-  *     tag, same discipline as [[BucketedCdcState]]).
+  *   - the committing batch id ([[TableVersions.writeBatchTag]]: the
+  *     replay anchor tag, same discipline as [[BucketedCdcState]]).
   *
   * Why a chain instead of `_SUCCESS`-scanned per-batch dirs: commits
   * become atomic (rename + marker — no half-visible directory states
@@ -42,7 +42,6 @@ import graft.sinks.TableVersions
 object VersionedDeltaState {
 
   private val SegmentsFile = "_SEGMENTS"
-  private val TagFile = "_GRAFT_BATCH"
 
   private def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -53,9 +52,7 @@ object VersionedDeltaState {
     new Path(TableVersions.dataDir(rootPath, version), "seg")
 
   private def readTag(fs: FileSystem, rootPath: Path, v: Long): Option[Long] =
-    TableVersions.readSmall(fs,
-      new Path(TableVersions.dataDir(rootPath, v), TagFile))
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
+    TableVersions.readBatchTag(fs, TableVersions.dataDir(rootPath, v))
 
   private def readSegments(fs: FileSystem, rootPath: Path, v: Long): Seq[Long] =
     TableVersions.readSmall(fs,
@@ -63,12 +60,6 @@ object VersionedDeltaState {
       .map(_.split("\n").iterator.map(_.trim).filter(_.nonEmpty)
         .map(_.toLong).toSeq)
       .getOrElse(Nil)
-
-  private def writeSmall(fs: FileSystem, p: Path, body: String): Unit = {
-    val out = fs.create(p, true)
-    out.write(body.getBytes("UTF-8"))
-    out.close()
-  }
 
   /** Newest committed version whose tag is strictly below `beforeTag`
     * — the replay anchor.
@@ -170,9 +161,9 @@ object VersionedDeltaState {
       if (BatchDirs.hasParquetFile(fs, seg) &&
           !spark.read.parquet(seg.toString).isEmpty) prior :+ pending.version
       else prior
-    writeSmall(fs, new Path(pending.dir, SegmentsFile),
+    TableVersions.writeSmall(fs, new Path(pending.dir, SegmentsFile),
       segs.mkString("", "\n", "\n"))
-    writeSmall(fs, new Path(pending.dir, TagFile), tag.toString)
+    TableVersions.writeBatchTag(fs, pending.dir, tag)
     TableVersions.commit(fs, rootPath, pending)
   }
 
@@ -203,9 +194,9 @@ object VersionedDeltaState {
     // into the merged commit (it becomes the next batches' anchor)
     anchorV.foreach(v =>
       carry(TableVersions.dataDir(rootPath, v), pending.dir))
-    writeSmall(fs, new Path(pending.dir, SegmentsFile),
+    TableVersions.writeSmall(fs, new Path(pending.dir, SegmentsFile),
       s"${pending.version}\n")
-    writeSmall(fs, new Path(pending.dir, TagFile), (upTo - 1).toString)
+    TableVersions.writeBatchTag(fs, pending.dir, upTo - 1)
     TableVersions.commit(fs, rootPath, pending)
   }
 

@@ -135,6 +135,25 @@ class LpaSpec extends AnyFunSuite {
     assert(e2.contains("missing from the assignment"))
   }
 
+  test("modularity refuses an empty assignment over edges, whatever the consumer reads") {
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
+    val empty = Seq.empty[(Long, Long)].toDF("node", "community")
+    // no community row exists for the column gates to ride on, and a
+    // community-only or count consumer reads no gated column
+    val consumers = Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "collect" -> (_.collect()),
+      "community" -> (_.select("community").collect()),
+      "count" -> (_.count()))
+    for ((name, consume) <- consumers) {
+      val e = SparkTestSession.refusalMessage(consume(
+        GraphOps.modularity(edges, "a", "b", empty, "node", "community")))
+      assert(e.contains("3 edge endpoints missing"), s"$name: $e")
+      val e2 = SparkTestSession.refusalMessage(consume(
+        GraphOps.conductance(edges, "a", "b", empty, "node", "community")))
+      assert(e2.contains("3 edge endpoints missing"), s"$name: $e2")
+    }
+  }
+
   test("dense hairball: LPA collapses to per-component labels (the documented epidemic mode)") {
     // The sf0.001 co-purchase graph is one dense hairball; synchronous
     // min-tie LPA is KNOWN to let one label sweep such graphs
