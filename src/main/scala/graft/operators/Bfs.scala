@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Multi-source breadth-first search: minimum hop distance from a
   * seed set to every reachable node, the level-synchronous frontier
@@ -24,35 +25,39 @@ import org.apache.spark.sql.functions._
   * comes first; the frontier emptiness probe rides the checkpointed
   * frontier, not a recomputation.
   *
-  * SIZE ROUTING (r18 — the [[Components.connectedComponents]]
-  * convention; measured: q74_bfs spent ~2 s scheduling 5 hop rounds of
-  * sub-0.1 s stages over a 30k-edge graph, and graph_harmonic ~40
-  * jobs of ≤0.06 s on a ≤2000-node brand graph): the edge list is
-  * pinned ONCE with its row count riding the checkpoint as an
-  * Observation metric — the pin also stops the per-hop frontier join
-  * from recomputing the edge subtree maxHops times on the distributed
-  * path. Long-id graphs at or under `maxLocalEdges` run the whole
+  * Size-routed by [[SizeRoute]] (measured: q74_bfs spent ~2 s
+  * scheduling 5 hop rounds of sub-0.1 s stages over a 30k-edge
+  * graph, and graph_harmonic ~40 jobs of ≤0.06 s on a ≤2000-node
+  * brand graph): long-id graphs under the edge cap run the whole
   * level-synchronous sweep in one driver pass over a CSR (identical
-  * frontier semantics, exact integer distances, same refusals),
-  * returned RDD-backed. Above the cap — the 100 TB regime — the
-  * checkpointed loop below runs unchanged.
+  * frontier semantics, exact integer distances, same refusals).
+  * Null endpoints or seeds fall through to the checkpointed loop
+  * below, as do graphs above the cap — the 100 TB regime; a probe
+  * pin, when one ran, also stops the per-hop frontier join from
+  * recomputing the edge subtree maxHops times there.
   */
 object Bfs {
 
-  private def longIds(e: DataFrame, seeds: DataFrame,
-                      seedCol: String): Boolean = {
-    import org.apache.spark.sql.types.LongType
-    e.schema("__src").dataType == LongType &&
-      e.schema("__dst").dataType == LongType &&
-      seeds.schema(seedCol).dataType == LongType
-  }
-
-  /** Pin the edge list once; count rides the checkpoint. */
-  private def pinEdges(e: DataFrame): (DataFrame, Long) = {
-    val obs = org.apache.spark.sql.Observation()
-    val pinned = e.observe(obs, count(lit(1)).as("rows"))
-      .localCheckpoint(true)
-    (pinned, obs.get("rows").asInstanceOf[Long])
+  /** Size-route one sweep ([[SizeRoute]]): Right(the driver kernel's
+    * (src, node, dist) rows) when the local route ran, else Left(the
+    * edge frame the distributed loop reads). Eligible: long ids on
+    * both endpoints and the seeds; null-bearing inputs fall through.
+    */
+  private def routed(edges: DataFrame, srcCol: String, dstCol: String,
+                     seeds: DataFrame, seedCol: String, maxHops: Int,
+                     perSource: Boolean)
+      : Either[DataFrame, Array[(Long, Long, Long)]] = {
+    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
+    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
+    val longIds = Seq(e0.schema("__src"), e0.schema("__dst"),
+      seeds.schema(seedCol)).forall(_.dataType == LongType)
+    val r = SizeRoute.decide(e0, longIds, SizeRoute.MaxLocalEdges)
+    val local = for {
+      es <- r.localPairs
+      sd <- Some(seeds.select(col(seedCol)).distinct().collect())
+        .filterNot(_.exists(_.isNullAt(0)))
+    } yield bfsLocal(es, sd.map(_.getLong(0)), maxHops, perSource)
+    local.toRight(r.input)
   }
 
   /** `edges` (srcCol, dstCol) is followed as directed — symmetrize
@@ -61,30 +66,14 @@ object Bfs {
     */
   def multiSourceBfs(edges: DataFrame, srcCol: String, dstCol: String,
                      seeds: DataFrame, seedCol: String,
-                     maxHops: Int,
-                     maxLocalEdges: Long = 4000000L): DataFrame = {
-    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val spark = edges.sparkSession
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-    val local = longIds(e0, seeds, seedCol) && maxLocalEdges >= 0
-    val (e, nEdges) = if (local) pinEdges(e0) else (e0, Long.MaxValue)
-    if (local && nEdges <= maxLocalEdges) {
-      import spark.implicits._
-      val es = e.as[(Long, Long)].collect()
-      val sd = seeds.select(col(seedCol).cast("long")).distinct()
-        .as[Long].collect()
-      val out = bfsLocal(es, sd, maxHops, perSource = false)
-        .map { case (_, node, dist) => (node, dist) }
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toSeq,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + out.length / 20000))).map {
-          case (n, d) => org.apache.spark.sql.Row(n, d) },
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dist",
-            org.apache.spark.sql.types.LongType))))
+                     maxHops: Int): DataFrame = {
+    val e = routed(edges, srcCol, dstCol, seeds, seedCol, maxHops,
+        perSource = false) match {
+      case Right(out) =>
+        return SizeRoute.rddBacked(edges.sparkSession,
+          SizeRoute.longCols("node", "dist"), out.toSeq) {
+          case (_, n, d) => Row(n, d) }
+      case Left(e) => e
     }
     var visited = seeds.select(col(seedCol).as("node")).distinct()
       .withColumn("dist", lit(0L))
@@ -124,31 +113,13 @@ object Bfs {
     */
   def perSourceBfs(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, seedCol: String,
-                   maxHops: Int,
-                   maxLocalEdges: Long = 4000000L): DataFrame = {
-    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val spark = edges.sparkSession
-    val e0 = edges.select(col(srcCol).as("__src"), col(dstCol).as("__dst"))
-    val local = longIds(e0, seeds, seedCol) && maxLocalEdges >= 0
-    val (e, nEdges) = if (local) pinEdges(e0) else (e0, Long.MaxValue)
-    if (local && nEdges <= maxLocalEdges) {
-      import spark.implicits._
-      val es = e.as[(Long, Long)].collect()
-      val sd = seeds.select(col(seedCol).cast("long")).distinct()
-        .as[Long].collect()
-      val out = bfsLocal(es, sd, maxHops, perSource = true)
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toSeq,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + out.length / 20000))).map {
-          case (s, n, d) => org.apache.spark.sql.Row(s, n, d) },
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("src",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dist",
-            org.apache.spark.sql.types.LongType))))
+                   maxHops: Int): DataFrame = {
+    val e = routed(edges, srcCol, dstCol, seeds, seedCol, maxHops,
+        perSource = true) match {
+      case Right(out) =>
+        return SizeRoute.rddBacked(edges.sparkSession,
+          SizeRoute.longCols("src", "node", "dist"), out.toSeq)(Row.fromTuple)
+      case Left(e) => e
     }
     var visited = seeds.select(col(seedCol).as("src")).distinct()
       .select(col("src"), col("src").as("node"))

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Connected components over a near-duplicate pair graph — the
   * clustering step after pair generation: every document in a
@@ -36,31 +37,27 @@ object Components {
     */
   def connectedComponents(pairs: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 20,
-                          partitions: Int = 0,
-                          maxLocalEdges: Long = 4000000L): DataFrame =
-    connectedComponentsWithStats(pairs, srcCol, dstCol, maxIter, partitions,
-      maxLocalEdges)._1
+                          partitions: Int = 0): DataFrame =
+    connectedComponentsWithStats(pairs, srcCol, dstCol, maxIter, partitions)._1
 
   /** As [[connectedComponents]], also returning the iteration count
     * (spec hook for the O(log diameter) convergence property; the
     * driver-local route reports 0 — it runs no distributed
     * iterations).
     *
-    * SIZE ROUTING (the GraphOps.scc convention): the symmetrized
-    * deduped edge list is already materialized for the fixpoint, so
-    * its count is free; when it fits `maxLocalEdges` (4M pairs ≈
-    * 64 MB — broadcast-sized) the driver runs union-find in one
-    * linear pass instead of paying O(log diameter) scheduled
+    * Size-routed by [[SizeRoute]]: the symmetrized deduped edge list
+    * is already materialized for the fixpoint, so its count is a
+    * plain count(); when it fits twice the edge cap (each undirected
+    * edge appears in both directions) the driver runs union-find in
+    * one linear pass instead of paying O(log diameter) scheduled
     * join+aggregate rounds, which dominate wall clock on the small
     * pair graphs near-dup clustering actually produces. Above the
     * cap — the 100 TB dedup regime — the distributed pointer-jumping
-    * fixpoint below runs unchanged, driver memory bounded by the
-    * knob, never the data.
+    * fixpoint below runs unchanged.
     */
   def connectedComponentsWithStats(pairs: DataFrame, srcCol: String, dstCol: String,
                                    maxIter: Int = 20,
-                                   partitions: Int = 0,
-                                   maxLocalEdges: Long = 4000000L): (DataFrame, Int) = {
+                                   partitions: Int = 0): (DataFrame, Int) = {
     val edges = pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     // Materialize sym hash-partitioned on src and labels on id with
     // EAGER localCheckpoint, not cache: the checkpoint truncates the
@@ -88,46 +85,30 @@ object Components {
     // disagree outside the BMP — the original collation rule; byte
     // comparison sidesteps it instead of forfeiting the route, which
     // was worth ~45 scheduled fixpoint jobs per entity-resolution
-    // query). Null-bearing string edges fall through to the
-    // distributed fixpoint (equi-join null semantics are its
-    // contract). Outputs return RDD-backed, never a row-scale
-    // LocalRelation (the cumLocal lesson).
+    // query). Null-bearing edges fall through to the distributed
+    // fixpoint (equi-join null semantics are its contract).
     val spark = pairs.sparkSession
-    def rddBacked(rows: Array[(Any, Any)],
-                  dt: org.apache.spark.sql.types.DataType): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows.toSeq,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + rows.length / 20000))).map {
-          case (a, b) => org.apache.spark.sql.Row(a, b) },
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id", dt),
-          org.apache.spark.sql.types.StructField("component", dt))))
-    val longIds =
-      sym.schema("src").dataType == org.apache.spark.sql.types.LongType &&
-        sym.schema("dst").dataType == org.apache.spark.sql.types.LongType
-    val stringIds =
-      sym.schema("src").dataType == org.apache.spark.sql.types.StringType &&
-        sym.schema("dst").dataType == org.apache.spark.sql.types.StringType
-    if ((longIds || stringIds) && sym.count() <= 2 * maxLocalEdges) {
-      import spark.implicits._
-      if (longIds) {
-        val local = sym.select(col("src"), col("dst")).as[(Long, Long)].collect()
-        val out = rddBacked(
-          unionFindLocal(local).map { case (a, b) => (a: Any, b: Any) },
-          org.apache.spark.sql.types.LongType)
-        return (if (partitions > 0) out.repartition(partitions, col("id"))
-                else out, 0)
+    val idType = sym.schema("src").dataType
+    // (the union widened src and dst to one type)
+    val eligible = idType == LongType || idType == StringType
+    val r = SizeRoute.decide(sym, eligible, 2 * SizeRoute.MaxLocalEdges)
+    val local: Option[Seq[Product]] =
+      if (!r.local) None
+      else if (idType == LongType) r.localPairs.map(unionFindLocal(_).toSeq)
+      else {
+        import spark.implicits._
+        Some(sym.as[(String, String)].collect())
+          .filter(_.forall(p => p._1 != null && p._2 != null))
+          .map(unionFindLocalUtf8(_).toSeq)
       }
-      val local = sym.select(col("src"), col("dst"))
-        .as[(String, String)].collect()
-      if (local.forall(p => p._1 != null && p._2 != null)) {
-        val out = rddBacked(
-          unionFindLocalUtf8(local).map { case (a, b) => (a: Any, b: Any) },
-          org.apache.spark.sql.types.StringType)
-        return (if (partitions > 0) out.repartition(partitions, col("id"))
-                else out, 0)
-      }
+    local match {
+      case Some(out) =>
+        val df = SizeRoute.rddBacked(spark, StructType(Seq(
+          StructField("id", idType), StructField("component", idType))),
+          out)(Row.fromTuple)
+        return (if (partitions > 0) df.repartition(partitions, col("id"))
+                else df, 0)
+      case None =>
     }
     // The INITIAL labels and the first two iterations use plain cache:
     // sym's checkpoint already truncated the deep upstream plan, so

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Triangle counting over an undirected simple graph — the
@@ -128,7 +128,7 @@ object GraphOps {
     * @return surviving (node, degree) rows — degree WITHIN the core
     */
   def kCore(edgesIn: DataFrame, aCol: String, bCol: String, k: Int,
-            maxIter: Int = 100, maxLocalEdges: Long = 4000000L): DataFrame = {
+            maxIter: Int = 100): DataFrame = {
     require(k >= 1, s"kCore: k must be >= 1, got $k")
     val canon = edgesIn
       .select(least(col(aCol), col(bCol)).as("x"),
@@ -136,17 +136,22 @@ object GraphOps {
       .filter(col("x") =!= col("y"))
       .distinct()
       .localCheckpoint(true)
-    // SIZE ROUTING (the scc convention): the deduped edge list is
-    // already materialized; under the broadcast-sized cap the driver
-    // peels in ONE linear pass (queue of sub-k nodes) instead of
-    // O(peel depth) scheduled rounds — path-shaped graphs peel one
-    // layer per round distributed, all layers at once locally.
-    if (canon.count() <= maxLocalEdges) {
-      val spark = edgesIn.sparkSession
-      import spark.implicits._
-      val local = canon.as[(Long, Long)].collect()
-      return spark.createDataset(kCoreLocal(local, k).toSeq)
-        .toDF("node", "degree")
+    // Size-routed by [[SizeRoute]] for integral ids: under the edge
+    // cap the driver peels in ONE linear pass (queue of sub-k nodes)
+    // instead of O(peel depth) scheduled rounds — path-shaped graphs
+    // peel one layer per round distributed, all layers at once
+    // locally. Ids keep their input type on both routes (kCore does
+    // not cast them), so the local rows are cast back to it.
+    val idType = canon.schema("x").dataType
+    val r = SizeRoute.decide(canon, SizeRoute.integral(idType),
+      SizeRoute.MaxLocalEdges)
+    r.localPairs match {
+      case Some(es) =>
+        return SizeRoute.rddBacked(edgesIn.sparkSession,
+            SizeRoute.longCols("node", "degree"), kCoreLocal(es, k).toSeq)(
+            Row.fromTuple)
+          .select(col("node").cast(idType), col("degree"))
+      case None =>
     }
     // symmetric form: degree = per-src row count
     var sym = canon.unionAll(canon.select(col("y").as("x"), col("x").as("y")))
@@ -260,36 +265,34 @@ object GraphOps {
     * dropped: they never change mutual reachability between distinct
     * nodes.
     *
-    * SIZE ROUTING (the broadcast-join analogy): SCC inputs in an
-    * analytics engine are CONDENSATION graphs over a dimension —
-    * parts, suppliers, URLs — whose deduped edge set is orders of
-    * magnitude smaller than the fact table that produced it (the
-    * |E|-bounding distinct() runs distributed first). When that
-    * deduped count is at most `maxLocalEdges` (default 4M pairs ≈
-    * 64 MB — the same order as a broadcast side), the driver runs
-    * ITERATIVE Tarjan in one linear pass: a depth-D acyclic residue
-    * costs the distributed fixpoint O(D) scheduled jobs (measured
-    * ~100 s on a 20k-node purchase graph whose trim peels hundreds
-    * of layers) and Tarjan a few milliseconds. Beyond the cap the
-    * distributed coloring path below runs unchanged — correct at any
-    * scale, driver memory bounded by the knob, not the data.
+    * Size-routed by [[SizeRoute]] (the broadcast-join analogy): SCC
+    * inputs in an analytics engine are CONDENSATION graphs over a
+    * dimension — parts, suppliers, URLs — whose deduped edge set is
+    * orders of magnitude smaller than the fact table that produced it
+    * (the |E|-bounding distinct() runs distributed first). Under the
+    * edge cap the driver runs ITERATIVE Tarjan in one linear pass: a
+    * depth-D acyclic residue costs the distributed fixpoint O(D)
+    * scheduled jobs (measured ~100 s on a 20k-node purchase graph
+    * whose trim peels hundreds of layers) and Tarjan a few
+    * milliseconds. Beyond the cap the distributed coloring path below
+    * runs unchanged. `partitions` is an output layout on both routes.
     *
     * @return (node, scc) — scc = MAX node id in the component
     */
   def scc(edgesIn: DataFrame, srcCol: String, dstCol: String,
-          maxIter: Int = 200, partitions: Int = 0,
-          maxLocalEdges: Long = 4000000L): DataFrame = {
+          maxIter: Int = 200, partitions: Int = 0): DataFrame = {
     val spark = edgesIn.sparkSession
     def rep(df: DataFrame, c: String): DataFrame =
       if (partitions > 0) df.repartition(partitions, col(c)) else df
     var edges = rep(edgesIn
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("t"))
       .filter(col("s") =!= col("t")).distinct(), "s").localCheckpoint(true)
-    if (edges.count() <= maxLocalEdges) {
-      import spark.implicits._
-      val local = edges.as[(Long, Long)].collect()
-      return rep(spark.createDataset(tarjanLocal(local).toSeq)
-        .toDF("node", "scc"), "node")
+    val r = SizeRoute.decide(edges, eligible = true, SizeRoute.MaxLocalEdges)
+    r.localPairs match {
+      case Some(es) =>
+        return rep(SizeRoute.rddBacked(spark, SizeRoute.longCols("node", "scc"),
+          tarjanLocal(es).toSeq)(Row.fromTuple), "node")
+      case None =>
     }
     var nodes = rep(edges.select(col("s").as("node"))
       .unionAll(edges.select(col("t").as("node")))
@@ -500,9 +503,9 @@ object GraphOps {
     * pinned by eager localCheckpoint per round (the PageRank lineage
     * lesson).
     *
-    * SIZE ROUTING (the [[scc]] convention): community inputs are
+    * Size-routed by [[SizeRoute]]: community inputs are
     * dimension-sized co-occurrence graphs whose deduped edge list the
-    * distributed distinct() bounds first; at ≤ `maxLocalEdges` the
+    * distributed distinct() bounds first; under the edge cap the
     * driver runs the SAME synchronous update on a CSR in one linear
     * pass per round — label-frequency graphs converge in a handful of
     * rounds, so the local path trades O(rounds) scheduled jobs for
@@ -513,8 +516,7 @@ object GraphOps {
     *         (the smallest most-frequent label wins everywhere)
     */
   def labelPropagation(edgesIn: DataFrame, aCol: String, bCol: String,
-                       maxIter: Int = 50,
-                       maxLocalEdges: Long = 4000000L): DataFrame = {
+                       maxIter: Int = 50): DataFrame = {
     val spark = edgesIn.sparkSession
     val canon = edgesIn
       .select(least(col(aCol), col(bCol)).cast("long").as("x"),
@@ -522,11 +524,12 @@ object GraphOps {
       .filter(col("x") =!= col("y"))
       .distinct()
       .localCheckpoint(true)
-    if (canon.count() <= maxLocalEdges) {
-      import spark.implicits._
-      val local = canon.as[(Long, Long)].collect()
-      return spark.createDataset(lpaLocal(local, maxIter).toSeq)
-        .toDF("node", "community")
+    val r = SizeRoute.decide(canon, eligible = true, SizeRoute.MaxLocalEdges)
+    r.localPairs match {
+      case Some(es) =>
+        return SizeRoute.rddBacked(spark, SizeRoute.longCols("node", "community"),
+          lpaLocal(es, maxIter).toSeq)(Row.fromTuple)
+      case None =>
     }
     val sym = canon.unionAll(canon.select(col("y").as("x"), col("x").as("y")))
       .localCheckpoint(true)
@@ -870,8 +873,8 @@ object GraphOps {
     *     escape the local optima the synchronous phase leaves behind —
     *     e.g. the reverted half-swap on a two-clique graph.
     *
-    * SIZE ROUTING (the [[labelPropagation]] convention): at
-    * ≤ maxLocalEdges the whole phase-1 fixpoint runs on a driver CSR
+    * Size-routed by [[SizeRoute]]: under the edge cap the whole
+    * phase-1 fixpoint runs on a driver CSR
     * with the SAME synchronous update — bit-identical to the
     * distributed rounds (spec-asserted parity). Phase 2 scores in
     * BigInt: contracted weights sum to the ORIGINAL edge count m,
@@ -884,8 +887,7 @@ object GraphOps {
     * @return (node, community)
     */
   def louvain(edgesIn: DataFrame, aCol: String, bCol: String,
-              maxIter: Int = 50,
-              maxLocalEdges: Long = 4000000L): DataFrame = {
+              maxIter: Int = 50): DataFrame = {
     val spark = edgesIn.sparkSession
     import spark.implicits._
     val canon = edgesIn
@@ -894,13 +896,14 @@ object GraphOps {
       .filter(col("x") =!= col("y"))
       .distinct()
       .localCheckpoint(true)
-    val m = canon.count()
-    val level1 =
-      if (m <= maxLocalEdges)
-        spark.createDataset(
-            louvainSyncLocal(canon.as[(Long, Long)].collect(), maxIter).toSeq)
-          .toDF("node", "c1")
-      else louvainSyncDistributed(canon, m, maxIter)
+    val r = SizeRoute.decide(canon, eligible = true, SizeRoute.MaxLocalEdges)
+    val level1 = r.localPairs match {
+      case Some(es) =>
+        SizeRoute.rddBacked(spark, SizeRoute.longCols("node", "c1"),
+          louvainSyncLocal(es, maxIter).toSeq)(Row.fromTuple)
+      case None =>
+        louvainSyncDistributed(canon, r.rows.getOrElse(canon.count()), maxIter)
+    }
     // contract to the weighted community graph (p ≤ q; p = q rows
     // carry the internal edge mass) — community-cardinality
     val wedges = canon
@@ -910,15 +913,13 @@ object GraphOps {
         greatest(col("cx"), col("cy")).as("q"))
       .groupBy(col("p"), col("q")).agg(count(lit(1)).cast("long").as("w"))
       .localCheckpoint(true)
-    // phase-2 cap is decoupled from the ROUTING knob: maxLocalEdges = 0
-    // forces phase 1 distributed (the parity-spec lever) but must not
-    // outlaw the community-cardinality collect phase 2 depends on
-    val phase2Cap = math.max(maxLocalEdges, 4000000L)
+    // phase 2 is driver-local on every route: a forced route moves
+    // phase 1 only, never this community-cardinality collect
     val nW = wedges.count()
-    require(nW <= phase2Cap,
+    require(nW <= SizeRoute.MaxLocalEdges,
       s"louvain: contracted community graph has $nW weighted edges > " +
-        s"$phase2Cap — raise maxLocalEdges (phase-2 refinement is " +
-        "driver-local at community cardinality)")
+        s"${SizeRoute.MaxLocalEdges} — phase-2 refinement collects " +
+        "the contracted graph to the driver, which this one exceeds")
     val refined = spark.createDataset(
         louvainWeightedLocal(wedges.as[(Long, Long, Long)].collect(),
           maxIter).toSeq)
@@ -1021,7 +1022,7 @@ object GraphOps {
   /** Driver-local phase 1: the SAME synchronous update on a CSR —
     * bit-identical to [[louvainSyncDistributed]] (parity
     * spec-asserted). Long arithmetic is safe here: the local route is
-    * only taken at ≤ maxLocalEdges collected edges.
+    * only taken under [[SizeRoute.MaxLocalEdges]] collected edges.
     */
   private[graft] def louvainSyncLocal(edges: Array[(Long, Long)], maxIter: Int)
       : Array[(Long, Long)] = {
@@ -1287,33 +1288,37 @@ object GraphOps {
     * remain — a layering of a cyclic graph does not exist; run
     * [[scc]] + condense first) and on maxIter exhaustion.
     *
-    * SIZE ROUTING (the [[scc]] convention): layering inputs are
-    * condensation/dependency DAGs over a dimension; when the deduped
-    * edge set fits `maxLocalEdges` the driver layers it in one
-    * linear Kahn pass — the distributed peel costs O(longest path)
-    * scheduled jobs, which dominates wall clock on a deep chain.
-    * Beyond the cap the distributed peel runs unchanged.
+    * Size-routed by [[SizeRoute]]: layering inputs are
+    * condensation/dependency DAGs over a dimension; under the edge
+    * cap the driver layers the deduped edge set in one linear Kahn
+    * pass — the distributed peel costs O(longest path) scheduled
+    * jobs, which dominates wall clock on a deep chain. Beyond the cap
+    * the distributed peel runs unchanged.
+    *
+    * Edges with a null endpoint are dropped on both routes: a null is
+    * no node, and the peel's anti-joins could never retire it.
     *
     * @return (node, level) over the edge endpoints
     */
   def topoLevels(edgesIn: DataFrame, srcCol: String, dstCol: String,
-                 maxIter: Int = 200, partitions: Int = 0,
-                 maxLocalEdges: Long = 4000000L): DataFrame = {
+                 maxIter: Int = 200, partitions: Int = 0): DataFrame = {
     val repart: DataFrame => DataFrame =
       df => if (partitions > 0) df.repartition(partitions, col("s")) else df
     var edges = repart(edgesIn
       .select(col(srcCol).cast("long").as("s"), col(dstCol).cast("long").as("t"))
+      .filter(col("s").isNotNull && col("t").isNotNull)
       .distinct()).localCheckpoint(true)
     require(edges.filter(col("s") === col("t")).isEmpty,
       "topoLevels: self-loop found — the graph is not a DAG")
-    if (edges.count() <= maxLocalEdges) {
-      val spark = edgesIn.sparkSession
-      import spark.implicits._
-      val local = edges.as[(Long, Long)].collect()
-      val out = spark.createDataset(topoLevelsLocal(local).toSeq)
-        .toDF("node", "level")
-      return if (partitions > 0) out.repartition(partitions, col("node"))
-             else out
+    val r = SizeRoute.decide(edges, eligible = true, SizeRoute.MaxLocalEdges)
+    r.localPairs match {
+      case Some(es) =>
+        val out = SizeRoute.rddBacked(edgesIn.sparkSession,
+          SizeRoute.longCols("node", "level"), topoLevelsLocal(es).toSeq)(
+          Row.fromTuple)
+        return if (partitions > 0) out.repartition(partitions, col("node"))
+               else out
+      case None =>
     }
     var nodes = edges.select(col("s").as("node"))
       .unionAll(edges.select(col("t").as("node")))

@@ -32,40 +32,20 @@ object PrefixSum {
     * order.
     */
   def runningTotal(df: DataFrame, orderCol: String, valueCol: String,
-                   outCol: String, partitions: Int = 0,
-                   maxOnePartRows: Long = 250000L): DataFrame = {
+                   outCol: String, partitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    // r17 size routing (the cumFromCountsWith convention, by a
-    // different mechanism): the input is pinned once with its row
-    // count riding the checkpoint as an Observation metric; at or
-    // under `maxOnePartRows` the range partition collapses to ONE
-    // partition — RangePartitioner skips sampling entirely at n=1,
-    // the totals collect is one row, and the window is one small
-    // task. Same expressions, so output types and values are
-    // identical by construction (the machinery is spec-pinned
-    // partition-count-invariant). Above the cap the sampled-range
-    // path runs unchanged against the pinned input.
-    // r18 probe gate (the ADVICE precedence/pin fixes): an explicit
-    // partitions > 0 is a REQUESTED distributed layout — the route is
-    // already decided, so no probe runs at all (the old unpinned
-    // path). An input that is already a materialized scan (q93's
-    // caller-checkpointed perValue — the measured +25% probe-pin tax)
-    // is probed with a plain count() instead of a re-serializing
-    // second checkpoint; only an eligible, unmaterialized input pays
-    // the observe + checkpoint pin.
-    val (base, totalIn) =
-      if (partitions > 0) (df, None)
-      else if (SizeRoute.isMaterializedScan(df)) (df, Some(df.count()))
-      else {
-        val pinObs = org.apache.spark.sql.Observation()
-        val pinned = df.observe(pinObs, count(lit(1)).as("rows"))
-          .localCheckpoint(true)
-        (pinned, Some(pinObs.get("rows").asInstanceOf[Long]))
-      }
+    // Size-routed by [[SizeRoute]]: under the row cap the range
+    // partition collapses to ONE partition — RangePartitioner skips
+    // sampling entirely at n=1, the totals collect is one row, and the
+    // window is one small task. Same expressions, so output types and
+    // values are identical by construction (the machinery is
+    // spec-pinned partition-count-invariant). An explicit
+    // partitions > 0 is a REQUESTED distributed layout: no probe runs.
+    val r = SizeRoute.decide(df, partitions <= 0, SizeRoute.MaxLocalRows)
     val n = if (partitions > 0) partitions
-      else if (totalIn.exists(_ <= maxOnePartRows)) 1
+      else if (r.local) 1
       else spark.sessionState.conf.numShufflePartitions
-    val ranged = base.repartitionByRange(n, col(orderCol))
+    val ranged = r.input.repartitionByRange(n, col(orderCol))
       .localCheckpoint(true) // pin the sampled range layout
     val withPid = ranged.withColumn("__pid",
       spark_partition_id().cast("long"))

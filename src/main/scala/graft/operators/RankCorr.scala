@@ -88,67 +88,46 @@ object RankCorr {
     * Null groups are dropped (the previous prior-join behavior,
     * now explicit). Rows must be unique on (g, vc) — enforced.
     *
-    * SIZE ROUTING (r17 — the [[Components.connectedComponents]]
-    * local-route convention; measured: q138_mad scheduled 50 jobs on
-    * a 15k-row input, almost all of them this machinery's sampling /
-    * pinning / boundary-collect fixed costs, twice): the input is
-    * pinned ONCE with its row count riding the checkpoint as an
-    * Observation metric. At or under `maxLocalRows` (250k rows ≈ 10 MB
-    * driver — measured crossover: a 7e5-row table is already faster
-    * on the sampled-range path than collect+parallelize) and with an integral
-    * rank axis, the cumulation is ONE linear driver pass over the
-    * collected count table — same refusals, same schema, same
-    * integers (grouping is hash-based and only `vc` is ordered, so
-    * JVM-vs-UTF8 string collation can never matter; the spec pins
-    * cross-route equality). Above the cap — the 100 TB regime — the
-    * sampled-range path below runs unchanged, now sampling the pinned
-    * input instead of recomputing the upstream aggregation twice.
+    * Size-routed by [[SizeRoute]] (measured: q138_mad scheduled 50
+    * jobs on a 15k-row input, almost all of them this machinery's
+    * sampling / pinning / boundary-collect fixed costs, twice): under
+    * the row cap and with an integral rank axis, the cumulation is ONE
+    * linear driver pass over the collected count table — same
+    * refusals, same schema, same integers (grouping is hash-based and
+    * only `vc` is ordered, so JVM-vs-UTF8 string collation can never
+    * matter; the spec pins cross-route equality). A valCol (when
+    * cumulated) must be integral or decimal: the local BigDecimal
+    * accumulation is exact only there (a double valCol would expose
+    * float summation order). Above the cap — the 100 TB regime — the
+    * sampled-range path ([[cumDistributed]]) runs unchanged, sampling
+    * the probe's pinned input instead of recomputing the upstream
+    * aggregation twice.
     */
   private[graft] def cumFromCountsWith(countsIn: DataFrame, vc: String,
                                            valCol: Option[String],
-                                           carry: Seq[String] = Nil,
-                                           maxLocalRows: Long = 250000L)
+                                           carry: Seq[String] = Nil)
       : DataFrame = {
+    import org.apache.spark.sql.types._
+    val valOk = valCol.forall(c => countsIn.schema(c).dataType match {
+      case _: DecimalType => true
+      case dt => SizeRoute.integral(dt)
+    })
+    val r = SizeRoute.decide(countsIn.filter(col("g").isNotNull),
+      SizeRoute.integral(countsIn.schema(vc).dataType) && valOk,
+      SizeRoute.MaxLocalRows)
+    if (r.local) cumLocal(r.input, vc, valCol, carry)
+    else cumDistributed(r.input, vc, valCol, carry)
+  }
+
+  /** Distributed route of [[cumFromCountsWith]]: the sampled-range
+    * cumulation over a count table whose groups are non-null.
+    */
+  private def cumDistributed(counts: DataFrame, vc: String,
+                             valCol: Option[String],
+                             carry: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    val spark = countsIn.sparkSession
-    // Probe gate (r18 — the r17 pin ran whenever maxLocalRows >= 0,
-    // taxing above-cap callers with a full extra materialization;
-    // measured +20% on q165 before its hand opt-out): the local route
-    // is ruled in/out from the SCHEMA first — integral rank axis, and
-    // a valCol (when cumulated) of integral or decimal type, since
-    // the local BigDecimal accumulation is exact only there (a double
-    // valCol would expose float summation order). Ruled out, or
-    // maxLocalRows < 0 (the caller KNOWS the table is big —
-    // jonckheere's axis × samples fill): the old unpinned distributed
-    // path runs with no probe cost. Eligible inputs that are already
-    // a materialized scan are probed with a plain count() instead of
-    // a re-serializing second checkpoint ([[SizeRoute]]).
-    val vcIntegral = countsIn.schema(vc).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val valOk = valCol.forall(c => countsIn.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _: DecimalType => true
-      case _ => false
-    })
-    val nonNullG = countsIn.filter(col("g").isNotNull)
-    val counts =
-      if (maxLocalRows < 0 || !vcIntegral || !valOk) nonNullG
-      else if (SizeRoute.isMaterializedScan(nonNullG)) {
-        if (nonNullG.count() <= maxLocalRows)
-          return cumLocal(nonNullG, vc, valCol, carry)
-        nonNullG
-      } else {
-        val pinObs = org.apache.spark.sql.Observation()
-        val pinned = nonNullG
-          .observe(pinObs, count(lit(1)).as("rows"))
-          .localCheckpoint(true)
-        if (pinObs.get("rows").asInstanceOf[Long] <= maxLocalRows)
-          return cumLocal(pinned, vc, valCol, carry)
-        pinned
-      }
+    val spark = counts.sparkSession
     val n = spark.sessionState.conf.numShufflePartitions
     val ranged = counts.repartitionByRange(n, col("g"), col(vc))
       .localCheckpoint(true) // pin the sampled range layout
@@ -245,7 +224,6 @@ object RankCorr {
                        valCol: Option[String],
                        carry: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types._
-    val spark = counts.sparkSession
     val schema = counts.schema
     val rows = counts.collect()
     val gi = schema.fieldIndex("g"); val vi = schema.fieldIndex(vc)
@@ -262,7 +240,7 @@ object RankCorr {
           == rs.length),
       s"cumFromCounts: rows must be unique on (g, $vc) — aggregate to " +
         "the (group, value) key first")
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](rows.length)
+    val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
     byG.valuesIterator.foreach { rs =>
       var below = 0L
       var acc = java.math.BigDecimal.ZERO
@@ -285,7 +263,7 @@ object RankCorr {
         val vals = Seq(r.get(gi), r.get(vi), r.get(ci),
           java.lang.Long.valueOf(below)) ++
           (if (vli.isDefined) Seq(cumv) else Nil) ++ cis.map(r.get)
-        out.add(org.apache.spark.sql.Row(vals: _*))
+        out += org.apache.spark.sql.Row(vals: _*)
         below += r.getAs[Number](ci).longValue
       }
     }
@@ -294,17 +272,7 @@ object RankCorr {
         StructField("below", LongType)) ++
         valCol.map(_ => StructField("cumv", DecimalType(38, 0))) ++
         carry.map(schema(_)))
-    // RDD-backed, NOT a LocalRelation: embedding 10⁵⁺ rows in the
-    // logical plan re-serializes them through every consumer's
-    // planning pass (measured: jonckheere's 7e5-row fill went 7 s →
-    // 12+ s as a LocalRelation; as a parallelized RDD the plan holds
-    // only a reference)
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.asScala.toSeq,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          1 + out.size / 20000))),
-      outSchema)
+    SizeRoute.rddBacked(counts.sparkSession, outSchema, out.toSeq)(r => r)
   }
 
   /** (group, value, m2) — doubled midranks of `vc` within each group,
@@ -837,12 +805,14 @@ object RankCorr {
       .withColumn("g", compositeKey(col("fam"), col("smp")))
     // (fam, smp) CARRY through the fused cumulation (r16): no
     // join-back onto filled, so filled is consumed exactly once and
-    // needs no pin of its own — the cumulation pins it internally
-    // maxLocalRows = -1: the fill is axis × samples by construction —
-    // always past the local-route crossover; skip the probe pin
-    val cum = cumFromCountsWith(
+    // needs no pin of its own — the cumulation pins it internally.
+    // The fill is axis × samples by construction — always past the
+    // local-route crossover — so it goes straight to the distributed
+    // kernel with no probe (measured: the probe pin cost q165 +20%;
+    // g needs no null filter: concat_ws is never null)
+    val cum = cumDistributed(
       filled.select(col("g"), col("v"), col("cnt"), col("fam"),
-        col("smp")), "v", None, Seq("fam", "smp"), maxLocalRows = -1L)
+        col("smp")), "v", None, Seq("fam", "smp"))
     val nsmp = cells.groupBy(col("fam"), col("smp"))
       .agg(sum(col("cnt")).cast("long").as("n_i"))
     def dcm(c: Column): Column = c.cast("decimal(38,0)")

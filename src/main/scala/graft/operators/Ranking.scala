@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed GLOBAL RANK — dense 1..N row numbering in a total
   * order WITHOUT the single-task `ROW_NUMBER() OVER (ORDER BY ...)`
@@ -35,73 +36,42 @@ object Ranking {
     * `orderCols`. Rows must be unique on the COMPOSITE key (append a
     * unique id as the last column to break ties); range partitioning
     * never splits equal composites, so per-partition distinctness
-    * certifies it on the same counts pass.
+    * certifies it on the same counts pass. Null keys refuse with
+    * their own diagnosis, counted on that same pass.
+    *
+    * Size-routed by [[SizeRoute]]: with ALL order columns integral
+    * and no explicit `partitions` (partitions > 0 is a requested
+    * distributed layout, the PrefixSum precedence), an input under
+    * the row cap is ranked by one driver sort with the same refusals.
+    * Otherwise the sampled-range path runs unchanged.
     */
   def globalRank(df: DataFrame, orderCols: Seq[String], outCol: String,
-                 partitions: Int): DataFrame =
-    globalRank(df, orderCols, outCol, partitions, 250000L)
-
-  /** SIZE-ROUTED form (r17 — the [[RankCorr.cumFromCountsWith]] /
-    * [[Components.connectedComponents]] convention): the input is
-    * pinned once with its row count riding the checkpoint as an
-    * Observation metric; at or under `maxLocalRows` with ALL order
-    * columns integral (longs compare identically on the driver and
-    * in Spark — strings do NOT outside the BMP, the Components
-    * collation rule), ranking is one driver sort over the collected
-    * rows, with the same uniqueness refusal. Above the cap, or with
-    * any non-integral key, the sampled-range path runs unchanged.
-    */
-  def globalRank(df: DataFrame, orderCols: Seq[String], outCol: String,
-                 partitions: Int, maxLocalRows: Long): DataFrame = {
+                 partitions: Int): DataFrame = {
     val spark = df.sparkSession
-    // r18 probe gate (the r17 pin ran unconditionally — measured +25%
-    // on q93's above-cap input): the local route is ruled IN/OUT from
-    // the schema and the caller's arguments BEFORE any
-    // materialization — all order columns integral (longs compare
-    // identically on the driver and in Spark — strings do NOT outside
-    // the BMP, the Components collation rule), no explicit partitions
-    // (partitions > 0 is a requested distributed layout and now takes
-    // precedence, the PrefixSum convention), maxLocalRows >= 0. When
-    // ruled out, the old unpinned distributed path runs — no probe
-    // cost at all. When the input is ALREADY a materialized scan (a
-    // caller's checkpoint, e.g. q93's perValue), a plain count()
-    // probes the route without re-serializing it ([[SizeRoute]]).
-    val integralKeys = orderCols.forall(c =>
-      df.schema(c).dataType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.ByteType => true
-        case _ => false
-      })
-    val base =
-      if (!integralKeys || partitions > 0 || maxLocalRows < 0) df
-      else if (SizeRoute.isMaterializedScan(df)) {
-        if (df.count() <= maxLocalRows)
-          return rankLocal(df, orderCols, outCol)
-        df
-      } else {
-        val pinObs = org.apache.spark.sql.Observation()
-        val pinned = df.observe(pinObs, count(lit(1)).as("rows"))
-          .localCheckpoint(true)
-        if (pinObs.get("rows").asInstanceOf[Long] <= maxLocalRows)
-          return rankLocal(pinned, orderCols, outCol)
-        pinned
-      }
+    val integralKeys =
+      orderCols.forall(c => SizeRoute.integral(df.schema(c).dataType))
+    val r = SizeRoute.decide(df, integralKeys && partitions <= 0,
+      SizeRoute.MaxLocalRows)
+    if (r.local) return rankLocal(r.input, orderCols, outCol)
     val n = if (partitions > 0) partitions
       else spark.sessionState.conf.numShufflePartitions
-    val ranged = base.repartitionByRange(n, orderCols.map(col): _*)
+    val ranged = r.input.repartitionByRange(n, orderCols.map(col): _*)
       .localCheckpoint(true)
     val withPid = ranged.withColumn("__pid",
       spark_partition_id().cast("long"))
     val countRows = withPid.groupBy(col("__pid"))
       .agg(count(lit(1)).as("__n"),
         count_distinct(col(orderCols.head), orderCols.tail.map(col): _*)
-          .as("__nd"))
+          .as("__nd"),
+        count(when(orderCols.map(col(_).isNull).reduce(_ || _), 1))
+          .as("__nn"))
       .collect()
+    // null keys first: count_distinct skips any-null key tuples, so
+    // they would otherwise trip the uniqueness check with the wrong
+    // diagnosis
+    require(countRows.forall(_.getLong(3) == 0L), nullKeys(orderCols))
     require(countRows.forall(r => r.getLong(1) == r.getLong(2)),
-      s"Ranking: rows must be unique on '${orderCols.mkString(",")}' — a " +
-        "global rank over duplicate keys is partition-order-dependent")
+      duplicateKeys(orderCols))
     val counts = countRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val offsets = (0 until n).map { p =>
       p.toLong -> (0L until p.toLong).map(counts.getOrElse(_, 0L)).sum
@@ -115,30 +85,26 @@ object Ranking {
       .drop("__pid", "__off")
   }
 
+  private def nullKeys(orderCols: Seq[String]): String =
+    s"Ranking: null order key in '${orderCols.mkString(",")}' (often a " +
+      "failed cast of bad data) — a global rank needs non-null, unique " +
+      "keys; filter or fix the cast first"
+
+  private def duplicateKeys(orderCols: Seq[String]): String =
+    s"Ranking: rows must be unique on '${orderCols.mkString(",")}' — a " +
+      "global rank over duplicate keys is partition-order-dependent"
+
   /** Driver-local route of [[globalRank]]: one sort over the
-    * collected rows on the integral key tuple, the same uniqueness
-    * refusal (null keys refuse too — the distributed guard's
-    * behavior), output returned RDD-backed (never a row-scale
-    * LocalRelation — the [[RankCorr]] cumLocal lesson).
+    * collected rows on the integral key tuple, the same refusals.
     */
   private def rankLocal(pinned: DataFrame, orderCols: Seq[String],
                         outCol: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = pinned.sparkSession
     val schema = pinned.schema
     val idx = orderCols.map(schema.fieldIndex)
     val rows = pinned.collect()
-    // NULL order keys refuse with the distributed path's message and
-    // semantics (r18 — ADVICE parity fix): there, count_distinct
-    // skips any-null key tuples, so a single null key trips the
-    // __n != __nd uniqueness refusal regardless of actual duplicates;
-    // accepting them here (nulls-first sorted) would make the SAME
-    // input succeed under the cap and refuse above it.
     require(rows.forall(r => idx.forall(i => !r.isNullAt(i))),
-      s"Ranking: rows must be unique on '${orderCols.mkString(",")}' — a " +
-        "global rank over duplicate keys is partition-order-dependent")
-    def key(r: org.apache.spark.sql.Row): Seq[Long] =
-      idx.map(r.getAs[Number](_).longValue)
+      nullKeys(orderCols))
+    def key(r: Row): Seq[Long] = idx.map(r.getAs[Number](_).longValue)
     implicit val ord: Ordering[Seq[Long]] = {
       import scala.math.Ordering.Implicits.seqOrdering
       seqOrdering(Ordering.Long)
@@ -146,21 +112,11 @@ object Ranking {
     val sorted = rows.sortBy(key)
     require(sorted.length < 2 || sorted.iterator.zip(
         sorted.iterator.drop(1)).forall { case (a, b) => key(a) != key(b) },
-      s"Ranking: rows must be unique on '${orderCols.mkString(",")}' — a " +
-        "global rank over duplicate keys is partition-order-dependent")
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row](rows.length)
-    var i = 0L
-    sorted.foreach { r =>
-      i += 1
-      out.add(org.apache.spark.sql.Row(
-        (r.toSeq :+ java.lang.Long.valueOf(i)): _*))
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out.asScala.toSeq,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          1 + out.size / 20000))),
-      StructType(schema.fields :+ StructField(outCol, LongType)))
+      duplicateKeys(orderCols))
+    SizeRoute.rddBacked(pinned.sparkSession,
+      StructType(schema.fields :+ StructField(outCol, LongType)),
+      sorted.toSeq.zipWithIndex) { case (r, i) =>
+      Row.fromSeq(r.toSeq :+ java.lang.Long.valueOf(i + 1L)) }
   }
 
   /** Reciprocal-rank fusion (Cormack & Clarke SIGIR '09) of several

@@ -73,7 +73,7 @@ object TableStats {
     val coc = counts.groupBy(col("cnt"))
       .agg(count(lit(1)).cast("bigint").as("n_keys_at"))
     val cum = PrefixSum.runningTotal(coc, "cnt", "n_keys_at", "cum_keys",
-      partitions = if (nKeys <= 250000L) 1 else 0)
+      partitions = if (SizeRoute.fits(nKeys, SizeRoute.MaxLocalRows)) 1 else 0)
     val totals = counts.agg(count(lit(1)).cast("bigint").as("n_keys"),
       sum(col("cnt")).cast("bigint").as("n_rows"),
       max(col("cnt")).cast("bigint").as("max_cnt"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.sinks.TableVersions
@@ -67,6 +68,9 @@ object VersionedFold {
     val committedId = prev.flatMap(p => TableVersions.readBatchTag(fs, p.dir))
     if (batchId.exists(id => committedId.exists(id <= _))) return
     val pending = TableVersions.begin(fs, root)
+    val sc = spark.sparkContext
+    val tag = s"graft-fold${pending.dir.getName}"
+    sc.addJobTag(tag)
     try {
       val staged = step(prev)
       // each table under its own SUBDIR: a parquet write over the
@@ -81,10 +85,24 @@ object VersionedFold {
       TableVersions.commit(fs, root, pending)
     } catch {
       case e: Throwable =>
+        // a failed write's cancelled tasks can still be unwinding —
+        // re-creating attempt dirs under the staging dir — after the
+        // action throws: let them end before removing it
+        awaitTasks(sc, tag)
         fs.delete(pending.dir, true)
         throw e
-    }
+    } finally sc.removeJobTag(tag)
     TableVersions.prune(fs, root, Keep)
+  }
+
+  /** Wait (at most 30 s) until no task of a job tagged `tag` runs. */
+  private def awaitTasks(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    def running = st.getJobIdsForTag(tag).iterator.flatMap(st.getJobInfo)
+      .flatMap(_.stageIds).flatMap(st.getStageInfo)
+      .exists(_.numActiveTasks > 0)
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (running && System.nanoTime() < deadline) Thread.sleep(10)
   }
 
   /** The current committed snapshot; throws before the first commit. */

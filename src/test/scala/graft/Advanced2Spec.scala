@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{GraphOps, Interpolate}
+import graft.operators.{GraphOps, Interpolate, SizeRoute}
 
 /** Round-12 operator specs: triangle counting on crafted graphs and
   * exact linear-interpolation gap fill.
@@ -72,18 +72,20 @@ class Advanced2Spec extends AnyFunSuite {
       .filter(e => e._1 != e._2)
     val localCore = GraphOps.kCore(rg.toDF("a", "b"), "a", "b", k = 4)
       .as[(Long, Long)].collect().toMap
-    val distCore = GraphOps.kCore(rg.toDF("a", "b"), "a", "b", k = 4,
-        maxLocalEdges = -1L)
-      .as[(Long, Long)].collect().toMap
+    val distCore = SizeRoute.forceRoute(false) {
+      GraphOps.kCore(rg.toDF("a", "b"), "a", "b", k = 4)
+        .as[(Long, Long)].collect().toMap
+    }
     assert(localCore === distCore)
     // a path peels one layer per round DISTRIBUTED: a tiny cap must
     // REFUSE, not return a superset that silently isn't a core
-    // (maxLocalEdges = -1 forces that path; the local peel is
+    // (forceRoute(false) forces that path; the local peel is
     // single-pass and needs no cap)
     val long = (1L to 30L).sliding(2).map(s => (s.head, s.last)).toSeq
     val ex = intercept[IllegalArgumentException] {
-      GraphOps.kCore(long.toDF("a", "b"), "a", "b", k = 2, maxIter = 3,
-        maxLocalEdges = -1L)
+      SizeRoute.forceRoute(false) {
+        GraphOps.kCore(long.toDF("a", "b"), "a", "b", k = 2, maxIter = 3)
+      }
     }
     assert(ex.getMessage.contains("maxIter"), ex.getMessage)
   }

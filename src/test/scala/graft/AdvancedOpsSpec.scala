@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Bfs, FeatureEncoding, Sampling, Skyline}
+import graft.operators.{Bfs, FeatureEncoding, Sampling, SizeRoute, Skyline}
 import graft.plans.{GraftFunctions, JaroWinkler}
 
 /** Specs for the round-11 operators: skyline, BFS, feature encoding,
@@ -113,31 +113,33 @@ class AdvancedOpsSpec extends AnyFunSuite {
     val edges0 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
     val sym = (edges0 ++ edges0.map(e => (e._2, e._1))).toDF("src", "dst")
     val seeds = Seq(1L, 10L).toDF("node")
-    def multi(maxLocal: Long) =
-      Bfs.multiSourceBfs(sym, "src", "dst", seeds, "node", maxHops = 3,
-          maxLocalEdges = maxLocal)
+    def multi(local: Boolean) = SizeRoute.forceRoute(local) {
+      Bfs.multiSourceBfs(sym, "src", "dst", seeds, "node", maxHops = 3)
         .as[(Long, Long)].collect().toMap
+    }
     // maxHops = 3 truncates node 5 (4 hops) on both routes
-    assert(multi(Long.MaxValue) === multi(-1L))
-    assert(!multi(Long.MaxValue).contains(5L))
-    def per(maxLocal: Long) =
-      Bfs.perSourceBfs(sym, "src", "dst", seeds, "node", maxHops = 10,
-          maxLocalEdges = maxLocal)
+    assert(multi(true) === multi(false))
+    assert(!multi(true).contains(5L))
+    def per(local: Boolean) = SizeRoute.forceRoute(local) {
+      Bfs.perSourceBfs(sym, "src", "dst", seeds, "node", maxHops = 10)
         .as[(Long, Long, Long)].collect().toSet
-    assert(per(Long.MaxValue) === per(-1L))
+    }
+    assert(per(true) === per(false))
     // a seed absent from the edge list still appears at dist 0
     val soloSeed = Seq(1L, 99L).toDF("node")
     val solo = Bfs.multiSourceBfs(sym, "src", "dst", soloSeed, "node",
         maxHops = 2).as[(Long, Long)].collect().toMap
     assert(solo(99L) == 0L)
     // per-source refusal parity: a node past maxHops refuses on both
-    for (maxLocal <- Seq(Long.MaxValue, -1L)) {
+    for (local <- Seq(true, false)) {
       val e = intercept[Exception] {
-        Bfs.perSourceBfs(sym, "src", "dst", seeds, "node", maxHops = 2,
-          maxLocalEdges = maxLocal).collect()
+        SizeRoute.forceRoute(local) {
+          Bfs.perSourceBfs(sym, "src", "dst", seeds, "node", maxHops = 2)
+            .collect()
+        }
       }
       assert(e.getMessage.contains("frontier still live"),
-        s"maxLocal=$maxLocal: ${e.getMessage}")
+        s"local=$local: ${e.getMessage}")
     }
   }
 
@@ -374,13 +376,16 @@ class AdvancedOps2Spec extends org.scalatest.funsuite.AnyFunSuite {
     val rows = (1 to 300).map(i =>
       ((i * 7 % 13).toLong, (i * 31 % 300).toLong, i.toLong))
     val df = rows.toDF("a", "b", "id").repartition(5)
-    def run(maxLocal: Long) =
-      Ranking.globalRank(df, Seq("a", "b", "id"), "r", 0, maxLocal)
+    def run(local: Boolean) = SizeRoute.forceRoute(local) {
+      Ranking.globalRank(df, Seq("a", "b", "id"), "r", 0)
         .select("id", "r").as[(Long, Long)].collect().toMap
-    assert(run(Long.MaxValue) === run(0L))
+    }
+    assert(run(true) === run(false))
     val dup = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("a", "id")
     val e = intercept[IllegalArgumentException] {
-      Ranking.globalRank(dup, Seq("a"), "r", 0, Long.MaxValue).collect()
+      SizeRoute.forceRoute(true) {
+        Ranking.globalRank(dup, Seq("a"), "r", 0).collect()
+      }
     }
     assert(e.getMessage.contains("unique"))
   }
@@ -391,11 +396,13 @@ class AdvancedOps2Spec extends org.scalatest.funsuite.AnyFunSuite {
     // null order key: the distributed guard (count_distinct skips
     // null tuples) and the local guard refuse with the same message
     val withNull = Seq(Some(1L), None, Some(3L)).toDF("v")
-    for (maxLocal <- Seq(Long.MaxValue, 0L)) {
+    for (local <- Seq(true, false)) {
       val e = intercept[IllegalArgumentException] {
-        Ranking.globalRank(withNull, Seq("v"), "r", 0, maxLocal).collect()
+        SizeRoute.forceRoute(local) {
+          Ranking.globalRank(withNull, Seq("v"), "r", 0).collect()
+        }
       }
-      assert(e.getMessage.contains("unique"), s"maxLocal=$maxLocal: $e")
+      assert(e.getMessage.contains("unique"), s"local=$local: $e")
     }
     // explicit partitions: a requested distributed layout wins over
     // the local route (the PrefixSum precedence) — the output carries

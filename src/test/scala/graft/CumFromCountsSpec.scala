@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.RankCorr
+import graft.operators.{RankCorr, SizeRoute}
 
 /** Direct property coverage for the r16 FUSED grouped cumulation
   * ([[RankCorr.cumFromCountsWith]]) — the primitive the whole
@@ -44,12 +44,13 @@ class CumFromCountsSpec extends AnyFunSuite {
       // forced distributed: this is the spanning-offset machinery's
       // brute-force gate (the local route has its own, plus the
       // cross-route equality test below)
-      val got = RankCorr.cumFromCountsWith(df, "v", Some("vv"),
-          Seq("vv"), maxLocalRows = 0L)
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1)) ->
-          (r.getLong(3), r.getDecimal(4).longValue, r.getLong(5)))
-        .toMap
+      val got = SizeRoute.forceRoute(false) {
+        RankCorr.cumFromCountsWith(df, "v", Some("vv"), Seq("vv"))
+          .collect()
+          .map(r => (r.getString(0), r.getLong(1)) ->
+            (r.getLong(3), r.getDecimal(4).longValue, r.getLong(5)))
+          .toMap
+      }
       assert(got.size == want.size, s"parts=$parts size")
       for (((g, v), (below, cumv)) <- want) {
         val (gb, gc, gvv) = got((g, v))
@@ -64,10 +65,11 @@ class CumFromCountsSpec extends AnyFunSuite {
   test("one giant group spanning every partition still offsets exactly " +
       "(forced onto the distributed route)") {
     val rows = (1 to 5000).map(i => ("g", i.toLong, 2L, 0L))
-    val got = RankCorr.cumFromCountsWith(
-        rows.toDF("g", "v", "cnt", "vv").repartition(8), "v", None,
-        maxLocalRows = 0L)
-      .orderBy("v").collect()
+    val got = SizeRoute.forceRoute(false) {
+      RankCorr.cumFromCountsWith(
+          rows.toDF("g", "v", "cnt", "vv").repartition(8), "v", None)
+        .orderBy("v").collect()
+    }
     got.zipWithIndex.foreach { case (r, i) =>
       assert(r.getLong(3) == 2L * i, s"row $i")
     }
@@ -94,34 +96,37 @@ class CumFromCountsSpec extends AnyFunSuite {
       (f"g$gi%03d", vi.toLong * 7 % 11, (gi * vi % 5 + 1).toLong,
         (gi * 13 + vi).toLong)
     val df = rows.toDF("g", "v", "cnt", "vv").repartition(5)
-    def run(maxLocal: Long) =
-      RankCorr.cumFromCountsWith(df, "v", Some("vv"), Seq("vv"),
-          maxLocalRows = maxLocal)
+    def run(local: Boolean) = SizeRoute.forceRoute(local) {
+      RankCorr.cumFromCountsWith(df, "v", Some("vv"), Seq("vv"))
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) ->
           (r.getLong(2), r.getLong(3), r.getDecimal(4).longValue,
             r.getLong(5)))
         .toMap
-    val local = run(Long.MaxValue)
-    val dist = run(0L)
+    }
+    val local = run(true)
+    val dist = run(false)
     assert(local == dist)
     // the same schema comes back from both routes
-    def schemaOf(maxLocal: Long) =
-      RankCorr.cumFromCountsWith(df, "v", Some("vv"), Seq("vv"),
-        maxLocalRows = maxLocal).schema.map(f => (f.name, f.dataType))
-    assert(schemaOf(Long.MaxValue) == schemaOf(0L))
+    def schemaOf(local: Boolean) = SizeRoute.forceRoute(local) {
+      RankCorr.cumFromCountsWith(df, "v", Some("vv"), Seq("vv"))
+        .schema.map(f => (f.name, f.dataType))
+    }
+    assert(schemaOf(true) == schemaOf(false))
     // refusals fire on the local route too, with the same diagnoses
     val dup = Seq(("g", 1L, 1L), ("g", 1L, 2L)).toDF("g", "v", "cnt")
     val e1 = SparkTestSession.refusalMessage {
-      RankCorr.cumFromCountsWith(dup, "v", None,
-        maxLocalRows = Long.MaxValue).collect()
+      SizeRoute.forceRoute(true) {
+        RankCorr.cumFromCountsWith(dup, "v", None).collect()
+      }
     }
     assert(e1.contains("unique"), e1)
     val nulls = Seq((Some("g"), Some(1L), 1L), (Some("g"), None, 1L))
       .toDF("g", "v", "cnt")
     val e2 = SparkTestSession.refusalMessage {
-      RankCorr.cumFromCountsWith(nulls, "v", None,
-        maxLocalRows = Long.MaxValue).collect()
+      SizeRoute.forceRoute(true) {
+        RankCorr.cumFromCountsWith(nulls, "v", None).collect()
+      }
     }
     assert(e2.contains("null values in v"), e2)
   }
@@ -137,15 +142,15 @@ class CumFromCountsSpec extends AnyFunSuite {
     val rows = (1 to 4000).map(i =>
       ("g", i.toLong, 1L, if (i <= 2400) None else Some(i.toLong)))
     val df = rows.toDF("g", "v", "cnt", "vv").repartition(7)
-    def run(maxLocal: Long) =
-      RankCorr.cumFromCountsWith(df, "v", Some("vv"), Nil,
-          maxLocalRows = maxLocal)
+    def run(local: Boolean) = SizeRoute.forceRoute(local) {
+      RankCorr.cumFromCountsWith(df, "v", Some("vv"), Nil)
         .collect()
         .map(r => r.getLong(1) ->
           (r.getLong(3), Option(r.getDecimal(4)).map(_.longValue)))
         .toMap
-    val local = run(Long.MaxValue)
-    val dist = run(0L)
+    }
+    val local = run(true)
+    val dist = run(false)
     assert(local == dist)
     // ground truth: null until v=2401, then the running sum
     assert(local(2400L)._2.isEmpty)
@@ -158,8 +163,9 @@ class CumFromCountsSpec extends AnyFunSuite {
       "integral/decimal values — and the integers still agree") {
     val rows = (1 to 30).map(i => ("g", i.toLong, 1L, i * 0.5))
     val df = rows.toDF("g", "v", "cnt", "vv")
-    val out = RankCorr.cumFromCountsWith(df, "v", Some("vv"), Nil,
-      maxLocalRows = Long.MaxValue)
+    val out = SizeRoute.forceRoute(true) {
+      RankCorr.cumFromCountsWith(df, "v", Some("vv"), Nil)
+    }
     // route witness: the distributed machinery ends in a window pass;
     // the local route would come back as one parallelized RDD scan
     assert(out.queryExecution.executedPlan.toString.contains("Window"),

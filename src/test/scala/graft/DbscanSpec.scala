@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dbscan, GraphOps}
+import graft.operators.{Dbscan, GraphOps, SizeRoute}
 
 /** DBSCAN against a driver-side brute-force reference (same min-label
   * canonicalization) and topoLevels against hand-layered DAGs +
@@ -145,15 +145,17 @@ class DbscanSpec extends AnyFunSuite {
     }.distinct
     val local = GraphOps.topoLevels(edges.toDF("s", "t"), "s", "t")
       .as[(Long, Long)].collect().toMap
-    val dist = GraphOps.topoLevels(edges.toDF("s", "t"), "s", "t",
-        maxLocalEdges = -1L)
-      .as[(Long, Long)].collect().toMap
+    val dist = SizeRoute.forceRoute(false) {
+      GraphOps.topoLevels(edges.toDF("s", "t"), "s", "t")
+        .as[(Long, Long)].collect().toMap
+    }
     assert(local === dist)
     // distributed cycle refusal still reachable
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 1L))
     val e = intercept[IllegalArgumentException] {
-      GraphOps.topoLevels(cyc.toDF("s", "t"), "s", "t",
-        maxLocalEdges = -1L).collect()
+      SizeRoute.forceRoute(false) {
+        GraphOps.topoLevels(cyc.toDF("s", "t"), "s", "t").collect()
+      }
     }
     assert(e.getMessage.contains("cycle"))
   }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, SizeRoute}
 
 /** Modularity-guided Louvain communities ([[GraphOps.louvain]]):
   * hand-graph exact partitions, Q beats LPA's epidemic labeling on
@@ -16,10 +16,8 @@ class LouvainSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def communities(edges: Seq[(Long, Long)],
-                          maxLocalEdges: Long = 4000000L,
                           maxIter: Int = 50): Map[Long, Long] =
-    GraphOps.louvain(edges.toDF("a", "b"), "a", "b",
-        maxIter = maxIter, maxLocalEdges = maxLocalEdges)
+    GraphOps.louvain(edges.toDF("a", "b"), "a", "b", maxIter = maxIter)
       .as[(Long, Long)].collect().toMap
 
   private def q(edges: Seq[(Long, Long)], assign: Map[Long, Long]): Double = {
@@ -76,12 +74,14 @@ class LouvainSpec extends AnyFunSuite {
     val cliqueB = for (a <- 101L to 108L; b <- 101L to 108L if a < b) yield (a, b)
     val edges = cliqueA ++ cliqueB ++ Seq((8L, 50L), (50L, 51L), (51L, 101L))
     val local = communities(edges)                    // routed local
-    val dist = communities(edges, maxLocalEdges = 0L) // forced distributed
+    val dist = SizeRoute.forceRoute(false)(communities(edges)) // forced distributed
     assert(dist == local, s"route divergence: ${dist.toSet -- local.toSet}")
-    val shuffled = GraphOps.louvain(
-        scala.util.Random.shuffle(edges).toDF("a", "b").repartition(13),
-        "a", "b", maxLocalEdges = 0L)
-      .as[(Long, Long)].collect().toMap
+    val shuffled = SizeRoute.forceRoute(false) {
+      GraphOps.louvain(
+          scala.util.Random.shuffle(edges).toDF("a", "b").repartition(13),
+          "a", "b")
+        .as[(Long, Long)].collect().toMap
+    }
     assert(shuffled == dist)
   }
 
@@ -90,7 +90,7 @@ class LouvainSpec extends AnyFunSuite {
       communities(twoTriangles, maxIter = 1))
     assert(e1.getMessage.contains("maxIter"), e1.getMessage)
     val e2 = intercept[IllegalArgumentException](
-      communities(twoTriangles, maxLocalEdges = 0L, maxIter = 1))
+      SizeRoute.forceRoute(false)(communities(twoTriangles, maxIter = 1)))
     assert(e2.getMessage.contains("maxIter"), e2.getMessage)
   }
 

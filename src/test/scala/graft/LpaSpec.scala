@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, SizeRoute}
 
 /** Deterministic label-propagation communities
   * ([[GraphOps.labelPropagation]]): hand-graph structure, the
@@ -16,10 +16,9 @@ class LpaSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def communities(edges: Seq[(Long, Long)],
-                          maxLocalEdges: Long = 4000000L,
                           maxIter: Int = 50): Map[Long, Long] =
     GraphOps.labelPropagation(edges.toDF("a", "b"), "a", "b",
-        maxIter = maxIter, maxLocalEdges = maxLocalEdges)
+        maxIter = maxIter)
       .as[(Long, Long)].collect().toMap
 
   test("two triangles over one bridge split into their own communities") {
@@ -56,13 +55,15 @@ class LpaSpec extends AnyFunSuite {
     val chain = Seq((8L, 50L), (50L, 51L), (51L, 101L))
     val edges = cliqueA ++ cliqueB ++ chain
     val local = communities(edges)                      // routed local
-    val dist = communities(edges, maxLocalEdges = 0L)   // forced distributed
+    val dist = SizeRoute.forceRoute(false)(communities(edges)) // forced distributed
     assert(dist == local, s"route divergence: ${dist.toSet -- local.toSet}")
     // partitioning invariance on the distributed path
-    val shuffled = GraphOps.labelPropagation(
-        scala.util.Random.shuffle(edges).toDF("a", "b").repartition(13),
-        "a", "b", maxLocalEdges = 0L)
-      .as[(Long, Long)].collect().toMap
+    val shuffled = SizeRoute.forceRoute(false) {
+      GraphOps.labelPropagation(
+          scala.util.Random.shuffle(edges).toDF("a", "b").repartition(13),
+          "a", "b")
+        .as[(Long, Long)].collect().toMap
+    }
     assert(shuffled == dist)
   }
 
@@ -79,7 +80,7 @@ class LpaSpec extends AnyFunSuite {
     val eLocal = intercept[IllegalArgumentException](communities(edges, maxIter = 1))
     assert(eLocal.getMessage.contains("no fixpoint"))
     val eDist = intercept[IllegalArgumentException](
-      communities(edges, maxLocalEdges = 0L, maxIter = 1))
+      SizeRoute.forceRoute(false)(communities(edges, maxIter = 1)))
     assert(eDist.getMessage.contains("no fixpoint"))
   }
 

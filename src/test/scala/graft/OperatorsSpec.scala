@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions._
-import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Multimodal, Similarity, SizeRoute, TextAnalysis}
 
 /** Property/recall specs for the hash-dependent operators that have
   * no DuckDB oracle (SURVEY.md §6).
@@ -532,10 +532,11 @@ class OperatorsSpec extends AnyFunSuite {
     // path 0-1-...-15: plain min propagation needs ~15 iterations;
     // pointer jumping doubles labelled distance per iteration
     val chain = (0 until 15).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
-    // maxLocalEdges = -1 forces the DISTRIBUTED fixpoint (the default
+    // forceRoute(false) forces the DISTRIBUTED fixpoint (the default
     // would route this model-sized graph to the driver union-find)
-    val (labels, iters) = graft.operators.Components
-      .connectedComponentsWithStats(chain, "a", "b", maxLocalEdges = -1L)
+    val (labels, iters) = SizeRoute.forceRoute(false) {
+      graft.operators.Components.connectedComponentsWithStats(chain, "a", "b")
+    }
     val comps = labels.as[(Long, Long)].collect().toMap
     assert(comps.size == 16 && comps.values.forall(_ == 0L))
     assert(iters <= 7, s"chain-16 should converge in ~log iterations, took $iters")
@@ -548,9 +549,10 @@ class OperatorsSpec extends AnyFunSuite {
     val df = pairs.toDF("a", "b")
     val local = graft.operators.Components.connectedComponents(df, "a", "b")
       .as[(Long, Long)].collect().toMap
-    val dist = graft.operators.Components
-      .connectedComponents(df, "a", "b", maxLocalEdges = -1L)
-      .as[(Long, Long)].collect().toMap
+    val dist = SizeRoute.forceRoute(false) {
+      graft.operators.Components.connectedComponents(df, "a", "b")
+        .as[(Long, Long)].collect().toMap
+    }
     assert(local === dist)
     // string-keyed graphs take the r18 local route (UTF-8-byte min)
     val s = Seq(("x", "y"), ("y", "z"), ("p", "q")).toDF("a", "b")
@@ -569,11 +571,12 @@ class OperatorsSpec extends AnyFunSuite {
     val halfStop = "｡"     // U+FF61
     assert(astral.compareTo(halfStop) < 0, "JVM order premise")
     val df = Seq((astral, halfStop), ("aa", "ab")).toDF("a", "b")
-    def run(maxLocal: Long) = graft.operators.Components
-      .connectedComponents(df, "a", "b", maxLocalEdges = maxLocal)
-      .as[(String, String)].collect().toMap
-    val local = run(4000000L)
-    val dist = run(-1L)
+    def run(local: Boolean) = SizeRoute.forceRoute(local) {
+      graft.operators.Components.connectedComponents(df, "a", "b")
+        .as[(String, String)].collect().toMap
+    }
+    val local = run(true)
+    val dist = run(false)
     assert(local === dist)
     assert(local(astral) == halfStop, "min must follow UTF-8 byte order")
     // null-bearing string edges fall through to the distributed path

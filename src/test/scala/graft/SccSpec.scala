@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.GraphOps
+import graft.operators.{GraphOps, SizeRoute}
 
 /** Strongly connected components: the distributed coloring algorithm
   * against a driver-side Tarjan reference on crafted and random
@@ -43,10 +43,8 @@ class SccSpec extends AnyFunSuite {
     out.toSet
   }
 
-  private def sccSets(edges: Seq[(Long, Long)], parts: Int = 4,
-                      maxLocalEdges: Long = 4000000L): Set[Set[Long]] =
-    GraphOps.scc(edges.toDF("s", "t").repartition(parts), "s", "t",
-        maxLocalEdges = maxLocalEdges)
+  private def sccSets(edges: Seq[(Long, Long)], parts: Int = 4): Set[Set[Long]] =
+    GraphOps.scc(edges.toDF("s", "t").repartition(parts), "s", "t")
       .as[(Long, Long)].collect()
       .groupBy(_._2).values.map(_.map(_._1).toSet).toSet
 
@@ -88,7 +86,7 @@ class SccSpec extends AnyFunSuite {
       assert(sccSets(edges, parts = 3) === want, s"trial $trial")
       assert(sccSets(edges, parts = 7) === want, s"trial $trial reparted")
       // force the distributed coloring path: both routes must agree
-      assert(sccSets(edges, parts = 3, maxLocalEdges = -1L) === want,
+      assert(SizeRoute.forceRoute(false)(sccSets(edges, parts = 3)) === want,
         s"trial $trial distributed")
     }
   }
@@ -111,8 +109,9 @@ class SccSpec extends AnyFunSuite {
     // a 30-node directed cycle needs ~30 color hops; maxIter=3 must refuse
     val cyc = (1L to 30L).map(i => (i, i % 30 + 1))
     val e = intercept[IllegalArgumentException] {
-      GraphOps.scc(cyc.toDF("s", "t"), "s", "t", maxIter = 3,
-        maxLocalEdges = -1L).collect()
+      SizeRoute.forceRoute(false) {
+        GraphOps.scc(cyc.toDF("s", "t"), "s", "t", maxIter = 3).collect()
+      }
     }
     assert(e.getMessage.contains("maxIter"))
   }
