@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   *    (`df.toLocalIterator`, JdbcOutputWriter.scala:694);
   *  - graft keeps the same semantics but stays distributed: one
   *    shuffle on the entity key (`max_by`), one co-partitioned
-  *    anti-join for deletes, no driver iteration, no sort.
+  *    anti-join for deletes, no driver iteration.
   *
   * At 100 TB the merge cost is exactly one exchange of the fact data
-  * on the key, with map-side partial aggregation; AQE handles skewed
-  * keys.
+  * on the key, with map-side partial aggregation (sort-based, see
+  * [[latestByKey]]); AQE handles skewed keys.
   */
 object CdcMerge {
 
@@ -31,9 +31,13 @@ object CdcMerge {
   private def structOf(cols: Seq[String]): Column = struct(cols.map(col): _*)
 
   /** Latest row per key ordered by `seqCols` (lexicographic struct
-    * comparison) — the "jdbcApplyLatestUpdatesOnly" semantics. Single
-    * hash-aggregate: payload rides inside `max_by`, so there is no
-    * self-join and no window sort.
+    * comparison) — the "jdbcApplyLatestUpdatesOnly" semantics. One
+    * aggregate over one exchange: the payload rides inside `max_by`, so
+    * there is no self-join and no window. The executed plan is a
+    * `SortAggregate`, not a hash aggregate, because `max_by` over a
+    * struct buffer cannot be hash-aggregated: the partial aggregate
+    * sorts on the key before the exchange and the final one sorts
+    * again after it.
     */
   def latestByKey(df: DataFrame, keyCols: Seq[String], seqCols: Seq[String]): DataFrame = {
     val payload = structOf(df.columns.toIndexedSeq)

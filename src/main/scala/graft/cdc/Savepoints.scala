@@ -1,6 +1,6 @@
 package graft.cdc
 
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Paths, Path, StandardCopyOption}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
@@ -13,7 +13,11 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * table → last-processed timestamp-folder, read at startup, upserted
   * after each successful table write. Local filesystem only (object
   * stores are out of scope in this environment); writes are
-  * synchronized like the reference's.
+  * synchronized like the reference's, since a table's raw and merged
+  * JDBC targets commit their watermarks from two threads. Each commit
+  * writes a sibling temp file and atomically renames it over
+  * `savepoints.json`, so a crash mid-write leaves the previous map
+  * readable, never a truncated file.
   */
 class Savepoints(directoryPath: String) {
 
@@ -52,7 +56,10 @@ class Savepoints(directoryPath: String) {
   private def flush(): Unit = {
     val json = mapper.writerWithDefaultPrettyPrinter()
       .writeValueAsString(new java.util.TreeMap[String, String](data.toMap.asJava))
-    Files.write(savepointsFilePath, json.getBytes("UTF-8"))
+    val tmp = savepointsFilePath.resolveSibling("savepoints.json.tmp")
+    Files.write(tmp, json.getBytes("UTF-8"))
+    Files.move(tmp, savepointsFilePath,
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   def snapshot: Map[String, String] = data.toMap

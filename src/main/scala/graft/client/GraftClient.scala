@@ -3,12 +3,14 @@ package graft.client
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.parallel.CollectionConverters._
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.StructType
 
 import graft.cdc.{CdcColumns, CdcMerge, Manifest, Savepoints}
-import graft.config.GraftConfig
+import graft.config.{GraftConfig, JdbcConnection}
 import graft.sinks.{FileSink, JdbcDdl, JdbcMergedApply, JdbcSink, JdbcTableManager,
   ObjectStoreClient, SchemaDoc, StorageLayout}
 import graft.sources.CdcBatchReader
@@ -22,13 +24,18 @@ import graft.sources.CdcBatchReader
   *     read them (internal columns managed, schemas unified);
   *  3. write to the configured file sink (csv/parquet/json) in the
   *     table/fingerprint/timestamp layout with a schema sidecar,
-  *     optionally merged to latest-state first;
+  *     optionally merged to latest-state first — or to the live JDBC
+  *     targets, raw append and merged apply;
   *  4. commit the savepoint.
   *
   * Tables are processed concurrently (the reference uses `.par`,
   * TableReader.scala:191) — each table's Spark job parallelizes
   * internally as well, so the driver-side pool just keeps the
-  * scheduler fed.
+  * scheduler fed. Within a table the two JDBC targets overlap too:
+  * each keeps its own watermark (`table@raw`, `table@merged`), so the
+  * merged apply runs on its own thread while the raw append runs on
+  * the table's thread, and the table savepoint is committed only after
+  * both have finished.
   */
 class GraftClient(spark: SparkSession, cfg: GraftConfig,
                   store: Option[ObjectStoreClient] = None) {
@@ -134,103 +141,108 @@ class GraftClient(spark: SparkSession, cfg: GraftConfig,
   }
 
   /** `rows` = observed input rows of the first write this run
-    * actually executed (post-watermark-filter, so replay runs report
-    * only what they really applied); 0 when nothing ran.
+    * actually executed, raw before merged (post-watermark-filter, so
+    * replay runs report only what they really applied); 0 when
+    * nothing ran.
     */
-  private case class JdbcOutcome(paths: Seq[String], anyBypassed: Boolean,
-                                 wroteAny: Boolean, rows: Long)
+  private case class JdbcOutcome(paths: Seq[String], anyBypassed: Boolean, rows: Long)
+
+  /** One target's part of a run: `path` unless bypassed, `rows` only
+    * when it wrote.
+    */
+  private case class TargetOutcome(path: Option[String], bypassed: Boolean, rows: Option[Long])
 
   /** Live JDBC export: ensure target tables (create / gate-evolve),
     * then raw append and/or incremental merged apply — the reference's
     * writeJdbcRaw/writeJdbcMerged flow (JdbcOutputWriter.scala:285-497)
-    * with the merge staying distributed. A gate Bypass skips the batch
-    * for that target, like the reference's warn-and-skip; the caller
-    * holds the TABLE savepoint back so a bypassed target is never
-    * silently starved. Each target additionally keeps its OWN
-    * watermark (`table@raw` / `table@merged`): on the replay run a
-    * target that already applied this batch is skipped outright — a
-    * raw append is never repeated (its PK would reject the duplicate
-    * rows and wedge the table), and the merged apply isn't re-run
-    * needlessly even though its seqval guard would tolerate it.
+    * with the merge staying distributed. The targets share nothing but
+    * the batch, so the merged target runs on its own thread while raw
+    * runs on the table's thread. Both finish before the outcome is
+    * combined, so a target that throws fails the table only after the
+    * other has finished and committed its own watermark.
     */
   private def writeJdbc(tableName: String, batch: DataFrame,
                         keyCols: Seq[String], usableSeq: Seq[String],
                         batchTs: String): JdbcOutcome = {
     val os = cfg.outputSettings
-    val written = new scala.collection.mutable.ArrayBuffer[String]
-    var anyBypassed = false
-    var wroteAny = false
-    var rows = 0L
-    val tsLong = scala.util.Try(batchTs.toLong).getOrElse(Long.MaxValue)
-    def watermark(kind: String): Option[Long] =
-      scala.util.Try(savepoints.getAsLong(s"$tableName@$kind")).toOption.flatten
-    def alreadyApplied(kind: String): Boolean = watermark(kind).exists(_ >= tsLong)
-    // rows this target has NOT applied yet: the batch re-read after a
-    // held-back savepoint may span folders a target already wrote, so
-    // each target filters to folders past its own watermark
-    def newSince(kind: String): DataFrame = watermark(kind) match {
-      case Some(w) if batch.columns.contains(CdcColumns.TimestampFolderCol) =>
-        batch.filter(
-          org.apache.spark.sql.functions.col(CdcColumns.TimestampFolderCol)
-            .cast("long") > w)
-      case _ => batch
+    def write(ddl: JdbcDdl.WriteType, conn: JdbcConnection) =
+      Try(writeTarget(ddl, conn, tableName, batch, keyCols, usableSeq, batchTs))
+    // merged runs on a thread of its own, started here so it inherits
+    // this table thread's Spark local properties, and is joined rather
+    // than awaited: `run`'s `.par` puts tables on the global pool, where
+    // a blocking await lets the pool add workers that start more tables
+    var mergedDone: Try[TargetOutcome] = Failure(new IllegalStateException(
+      s"'$tableName' merged jdbc target did not finish"))
+    val merged = cfg.jdbcConnectionMerged.filter(_ => os.saveIntoJdbcMerged).map { c =>
+      val t = new Thread(() => mergedDone = write(JdbcDdl.Merged, c), s"graft-merged-$tableName")
+      t.start()
+      t
     }
-    if (os.saveIntoJdbcRaw) cfg.jdbcConnectionRaw.foreach { conn =>
-      if (alreadyApplied("raw"))
-        written += s"${conn.jdbcUrl}/${conn.jdbcSchema}.$tableName"
-      else {
-        val rawIn = newSince("raw")
-        val raw = JdbcSink.rawFrame(rawIn)
-        JdbcTableManager.ensureTable(conn, raw.schema, tableName,
-          JdbcDdl.Raw, keyCols, cfg.largeTextFieldSet) match {
-          case JdbcTableManager.Bypassed(reasons) =>
-            anyBypassed = true
-            System.err.println(s"[graft] '$tableName' raw jdbc batch bypassed: ${reasons.mkString("; ")}")
-          case _ =>
-            // observed on the FILTERED frame, so a replay run reports
-            // only what it actually applied
-            val obs = Observation()
-            JdbcSink.writeRaw(rawIn.observe(obs, count(lit(1)).as("rows")),
-              conn, tableName, os.jdbcBatchSize)
-            if (!wroteAny) rows = observedRows(obs)
-            wroteAny = true
-            savepoints.write(s"$tableName@raw", batchTs)
-            written += s"${conn.jdbcUrl}/${conn.jdbcSchema}.$tableName"
-        }
+    val rawDone = cfg.jdbcConnectionRaw.filter(_ => os.saveIntoJdbcRaw).map(write(JdbcDdl.Raw, _))
+    merged.foreach(_.join())
+    val done = (rawDone ++ merged.map(_ => mergedDone)).map(_.get).toSeq
+    JdbcOutcome(done.flatMap(_.path), done.exists(_.bypassed), done.flatMap(_.rows).headOption.getOrElse(0L))
+  }
+
+  /** One JDBC target, raw or merged. A gate Bypass skips the batch for
+    * that target, like the reference's warn-and-skip; the caller holds
+    * the TABLE savepoint back so a bypassed target is never silently
+    * starved. Each target keeps its OWN watermark (`table@raw` /
+    * `table@merged`): on the replay run a target that already applied
+    * this batch is skipped outright — a raw append is never repeated
+    * (its PK would reject the duplicate rows and wedge the table), and
+    * the merged apply isn't re-run needlessly even though its seqval
+    * guard would tolerate it.
+    */
+  private def writeTarget(ddl: JdbcDdl.WriteType, conn: JdbcConnection, tableName: String,
+                          batch: DataFrame, keyCols: Seq[String], usableSeq: Seq[String],
+                          batchTs: String): TargetOutcome = {
+    val os = cfg.outputSettings
+    val kind = if (ddl == JdbcDdl.Raw) "raw" else "merged"
+    val dest = s"${conn.jdbcUrl}/${conn.jdbcSchema}.$tableName"
+    val mark = s"$tableName@$kind"
+    val watermark = Try(savepoints.getAsLong(mark)).toOption.flatten
+    if (watermark.exists(_ >= Try(batchTs.toLong).getOrElse(Long.MaxValue)))
+      TargetOutcome(Some(dest), bypassed = false, rows = None)
+    else {
+      // rows this target has NOT applied yet: the batch re-read after a
+      // held-back savepoint may span folders a target already wrote, so
+      // each target filters to folders past its own watermark
+      val fresh = watermark match {
+        case Some(w) if batch.columns.contains(CdcColumns.TimestampFolderCol) =>
+          batch.filter(col(CdcColumns.TimestampFolderCol).cast("long") > w)
+        case _ => batch
+      }
+      val (input, stored, apply) = ddl match {
+        case JdbcDdl.Raw =>
+          (fresh, JdbcSink.rawFrame(fresh).schema,
+            (df: DataFrame) => JdbcSink.writeRaw(df, conn, tableName, os.jdbcBatchSize))
+        case JdbcDdl.Merged =>
+          // merged tables keep business columns + the seqval watermark and
+          // the op marker drives the apply (dropped before storage)
+          val keep = Set(CdcColumns.OperationCol, CdcColumns.SeqValCol) ++ usableSeq
+          val mergedIn = JdbcSink.rawFrame(fresh).drop(batch.columns.filter { c =>
+            val lc = c.toLowerCase
+            (lc.startsWith(CdcColumns.InternalPrefix) || lc.startsWith(CdcColumns.ClientPrefix)) &&
+              !keep.contains(lc)
+          }.toIndexedSeq: _*)
+          (mergedIn, StructType(mergedIn.schema.fields.filterNot(_.name == CdcColumns.OperationCol)),
+            (df: DataFrame) => JdbcMergedApply(df, conn, tableName, keyCols,
+              seqCol = usableSeq.head, batchSize = os.jdbcBatchSize.toInt))
+      }
+      JdbcTableManager.ensureTable(conn, stored, tableName, ddl, keyCols, cfg.largeTextFieldSet) match {
+        case JdbcTableManager.Bypassed(reasons) =>
+          System.err.println(s"[graft] '$tableName' $kind jdbc batch bypassed: ${reasons.mkString("; ")}")
+          TargetOutcome(None, bypassed = true, rows = None)
+        case _ =>
+          // observed on the FILTERED frame, so a replay run reports
+          // only what it actually applied
+          val obs = Observation()
+          apply(input.observe(obs, count(lit(1)).as("rows")))
+          savepoints.write(mark, batchTs)
+          TargetOutcome(Some(dest), bypassed = false, rows = Some(observedRows(obs)))
       }
     }
-    if (os.saveIntoJdbcMerged) cfg.jdbcConnectionMerged.foreach { conn =>
-      if (alreadyApplied("merged"))
-        written += s"${conn.jdbcUrl}/${conn.jdbcSchema}.$tableName"
-      else {
-        // merged tables keep business columns + the seqval watermark and
-        // the op marker drives the apply (dropped before storage)
-        val keep = Set(CdcColumns.OperationCol, CdcColumns.SeqValCol) ++ usableSeq
-        val mergedIn = JdbcSink.rawFrame(newSince("merged")).drop(batch.columns.filter { c =>
-          val lc = c.toLowerCase
-          (lc.startsWith(CdcColumns.InternalPrefix) || lc.startsWith(CdcColumns.ClientPrefix)) &&
-            !keep.contains(lc)
-        }.toIndexedSeq: _*)
-        val storedSchema = org.apache.spark.sql.types.StructType(
-          mergedIn.schema.fields.filterNot(_.name == CdcColumns.OperationCol))
-        JdbcTableManager.ensureTable(conn, storedSchema, tableName,
-          JdbcDdl.Merged, keyCols, cfg.largeTextFieldSet) match {
-          case JdbcTableManager.Bypassed(reasons) =>
-            anyBypassed = true
-            System.err.println(s"[graft] '$tableName' merged jdbc batch bypassed: ${reasons.mkString("; ")}")
-          case _ =>
-            val obs = Observation()
-            JdbcMergedApply(mergedIn.observe(obs, count(lit(1)).as("rows")),
-              conn, tableName, keyCols,
-              seqCol = usableSeq.head, batchSize = os.jdbcBatchSize.toInt)
-            if (!wroteAny) rows = observedRows(obs)
-            wroteAny = true
-            savepoints.write(s"$tableName@merged", batchTs)
-            written += s"${conn.jdbcUrl}/${conn.jdbcSchema}.$tableName"
-        }
-      }
-    }
-    JdbcOutcome(written.toSeq, anyBypassed, wroteAny, rows)
   }
 
   /** Run all (included) tables; returns per-table results. */
@@ -241,7 +253,7 @@ class GraftClient(spark: SparkSession, cfg: GraftConfig,
       Manifest.fromFile(cfg.sourceLocation.manifestPath), include)
     val done = new AtomicInteger(0)
     val results = manifest.toSeq.par.map { case (tableName, entry) =>
-      val r = scala.util.Try(runTable(tableName, entry, merged)) match {
+      val r = Try(runTable(tableName, entry, merged)) match {
         case scala.util.Success(res) => res
         case scala.util.Failure(e) =>
           // the reference logs and continues on per-table failure

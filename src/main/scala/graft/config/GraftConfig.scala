@@ -154,5 +154,13 @@ object GraftConfig {
       throw InvalidConfigException("saveIntoJdbcMerged requires jdbcConnectionMerged")
     if (os.jdbcBatchSize <= 0)
       throw InvalidConfigException(s"jdbcBatchSize must be positive: got ${os.jdbcBatchSize}")
+    // the client creates each target table (with its key and index)
+    // before every write, so only append can be honoured: ignore would
+    // write nothing yet advance the savepoint, errorifexists fails
+    // every run, and overwrite recreates the table without its key
+    for ((section, Some(c)) <- Seq("jdbcConnectionRaw" -> cfg.jdbcConnectionRaw,
+                                   "jdbcConnectionMerged" -> cfg.jdbcConnectionMerged)
+         if !c.jdbcSaveMode.equalsIgnoreCase("append"))
+      throw InvalidConfigException(s"$section.jdbcSaveMode must be append: got '${c.jdbcSaveMode}'")
   }
 }

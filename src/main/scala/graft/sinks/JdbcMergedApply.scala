@@ -21,10 +21,11 @@ import graft.config.JdbcConnection
   * graft keeps the same end state but stays distributed:
   *
   *  1. ONE shuffle reduces the batch to the latest row per key
-  *     ([[CdcMerge.latestByKey]], `max_by`, map-side partials) — after
-  *     which every key appears exactly once, so partitions touch
-  *     disjoint rows and executors can write concurrently without
-  *     cross-partition lock conflicts;
+  *     ([[CdcMerge.latestByKey]], `max_by`; a `SortAggregate` with a
+  *     sort on each side of the exchange, since `max_by` over a struct
+  *     cannot be hash-aggregated) — after which every key appears
+  *     exactly once, so partitions touch disjoint rows and executors
+  *     can write concurrently without cross-partition lock conflicts;
   *  2. `foreachPartition` opens a connection PER EXECUTOR PARTITION
   *     and applies its rows with JDBC-batched statements: DELETE for a
   *     key whose latest op is 1, otherwise an UPDATE guarded by

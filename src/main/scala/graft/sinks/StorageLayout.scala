@@ -3,8 +3,6 @@ package graft.sinks
 import java.io.{FileNotFoundException, IOException}
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
 /** Storage-layout abstraction over the output destination — the pure
   * logic of the reference's writer split
   * (cda-client FileBasedOutputWriter.scala:190-199 scheme dispatch,
@@ -179,7 +177,7 @@ final class LocalFsObjectStore(root: Path) extends ObjectStoreClient {
   override def keyCount(bucket: String, prefix: String): Int = {
     val dir = bucketDir(bucket)
     if (!Files.isDirectory(dir)) 0
-    else Files.walk(dir).iterator().asScala
+    else LocalFiles.tree(dir)
       .filter(Files.isRegularFile(_))
       .count(p => dir.relativize(p).toString.startsWith(prefix)).toInt
   }

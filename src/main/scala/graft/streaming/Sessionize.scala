@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.sinks.LocalFiles
+
 /** Stateful streaming sessionization with
   * `flatMapGroupsWithState` (SURVEY.md §2a row 18 family): the
   * streaming counterpart of the batch `q17_sessionize` window query.
@@ -173,7 +175,7 @@ object Sessionize {
       ev.unpersist()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       // the memory sink holds the drained rows; the replay files are dead
-      deleteRecursively(dirPath)
+      LocalFiles.deleteRecursively(dirPath)
     }
     // the plan is already bound to the memory sink — the catalog name
     // can go (and must, or each replay leaks a temp view)
@@ -182,14 +184,5 @@ object Sessionize {
       .filter(col("user_id") >= 0) // drop the sentinel
       .select(col("user_id"), col("session_no"), col("n_events"),
         col("session_start"), col("session_end"), col("sum_value"))
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => Files.deleteIfExists(f))
-    }
   }
 }

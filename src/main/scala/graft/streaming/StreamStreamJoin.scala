@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sinks.LocalFiles
+
 /** Watermarked stream-stream inner join (SURVEY.md §2a row 18d) —
   * joining two unbounded feeds (e.g. two CDC topics, or an event
   * stream against itself) with a key equality plus an event-time
@@ -99,18 +101,9 @@ object StreamStreamJoin {
     } finally {
       ev.unpersist()
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      deleteRecursively(dirPath)
+      LocalFiles.deleteRecursively(dirPath)
     }
     spark.catalog.dropTempView(name)
     drained
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (Files.exists(p)) {
-      Files.walk(p).iterator().asScala.toSeq.reverseIterator
-        .foreach(f => Files.deleteIfExists(f))
-    }
   }
 }

@@ -298,4 +298,22 @@ class SinksConfigSpec extends AnyFunSuite {
       .replace("saveAsSingleFile: true", "saveIntoJdbcRaw: true")
     assertThrows[InvalidConfigException](GraftConfig.fromYaml(jdbcYaml))
   }
+
+  test("config validation rejects jdbc save modes other than append on either connection") {
+    def withConn(section: String, mode: Option[String]): String =
+      goodYaml + s"""$section:
+         |  jdbcUrl: "jdbc:derby:memory:x"
+         |  jdbcSchema: APP
+         |""".stripMargin + mode.fold("")(m => s"  jdbcSaveMode: $m\n")
+    for (section <- Seq("jdbcConnectionRaw", "jdbcConnectionMerged")) {
+      val default = GraftConfig.fromYaml(withConn(section, None))
+      assert((default.jdbcConnectionRaw ++ default.jdbcConnectionMerged).map(_.jdbcSaveMode) == Seq("append"))
+      GraftConfig.fromYaml(withConn(section, Some("append")))
+      GraftConfig.fromYaml(withConn(section, Some("APPEND")))
+      for (mode <- Seq("ignore", "errorifexists", "overwrite", "upsert")) {
+        val e = intercept[InvalidConfigException](GraftConfig.fromYaml(withConn(section, Some(mode))))
+        assert(e.getMessage == s"$section.jdbcSaveMode must be append: got '$mode'")
+      }
+    }
+  }
 }
